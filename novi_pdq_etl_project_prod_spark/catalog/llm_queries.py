@@ -334,9 +334,9 @@ def m8_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dups on the DETERMINISTIC md5 path (graduated to
     an exact DuckDB oracle in round 8 — VERDICT r07 item 1): one md5
     base hash per shingle, 64 affine permutations mod 2³¹−1, hash-free
-    band keys, est_jaccard = agreeing-minima/64. The blake2b Arrow path
-    (`minhash_signatures_arrow`, dedup.py:347) remains the raw-speed
-    alternative for non-certified use."""
+    band keys, est_jaccard = agreeing-minima/64. The signatures come
+    from one Arrow pass (`minhash_signatures_md5`), the only MinHash
+    path in the engine."""
     docs = _t(spark, sf_dir, "documents")
     return minhash_near_duplicates_md5(
         docs, n=3, num_hashes=64, bands=16, threshold=0.5
@@ -414,8 +414,8 @@ ORDER BY id_a, id_b
 
 
 #: m9's 60 signed bit-sum aggregates / packed-signature terms, generated
-#: once and spliced into the SQL (the Spark side builds the identical 60
-#: expressions in simhash_signatures_md5).
+#: once and spliced into the SQL (the Spark side computes the same 60
+#: bit-sums per doc in one Arrow pass, simhash_signatures_md5).
 _M9_BIT_SUMS = ",\n         ".join(
     f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
     for i in range(60)
@@ -429,13 +429,13 @@ _M9_SIG = " + ".join(
 def m9_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dups on the DETERMINISTIC md5 path (graduated to an
     exact DuckDB oracle in round 8): 60-bit signatures from md5 token
-    hashes, 4 × 15-bit pigeonhole banding, exact hamming filter. The
-    xxhash64 fold variant (`simhash_signatures`, dedup.py) remains for
-    non-certified use."""
+    hashes (one Arrow pass, `simhash_signatures_md5` — the only SimHash
+    path in the engine), 4 × 15-bit pigeonhole banding, exact hamming
+    ≤ 3 filter."""
     docs = _t(spark, sf_dir, "documents")
     sigs = simhash_signatures_md5(docs)
     return (
-        simhash_near_duplicates(sigs, max_hamming=3, n_chunks=4, chunk_bits=15)
+        simhash_near_duplicates(sigs)
         .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
         .orderBy("id_a", "id_b")
     )

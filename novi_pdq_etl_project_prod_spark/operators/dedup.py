@@ -11,19 +11,23 @@ Scale design (the whole point of these operators):
   dropped with a document-frequency cap first (standard "stop-shingle"
   removal — they carry no discriminative signal and quadratic cost).
   Use for validation and small corpora; at 100 TB use MinHash-LSH.
-- **minhash_signatures / lsh_candidate_pairs** — signatures are computed
-  per-row with JVM-side higher-order functions (xxhash64 × k seeds over
-  the shingle array): NO shuffle, no Python. Banding explodes each doc
-  into b band rows, one shuffle groups equal band-hashes; candidate pair
-  count ≈ true-near-dup count + tunable false positives, so the verify
-  join touches candidates only — never the n² pair space.
-- **simhash_signatures** — one 64-bit signature per doc computed from
-  token hashes; hamming-ball candidate search via 16-bit band exact-match
-  (any pair within hamming distance 3 of 64 shares at least one of 4
-  bands — pigeonhole).
+- **minhash_near_duplicates_md5** — one Arrow-batched pass per doc
+  computes its MinHash signature (ASCII-whitespace tokens, distinct word
+  n-grams, one md5 base hash per gram, k affine permutations mod 2³¹−1
+  as a NumPy broadcast): no shuffle. Banding explodes each doc into b
+  band rows keyed by the plain band values, one shuffle groups equal
+  keys; candidate pair count ≈ true-near-dup count + tunable false
+  positives, so the verify join touches candidates only — never the n²
+  pair space.
+- **simhash_signatures_md5 / simhash_near_duplicates** — one 60-bit
+  signature per doc from md5 token hashes (the same Arrow pass shape);
+  hamming-ball candidate search via 15-bit chunk exact-match (any pair
+  within hamming distance 3 of 60 shares at least one of 4 chunks —
+  pigeonhole).
 
-Determinism: all hashing is seeded xxhash64 / md5 — reproducible across
-runs and partitionings.
+Determinism: every hash is md5, and every Arrow UDF tokenizes like the
+JVM ``tokens()`` and the DuckDB oracles (ASCII ``\\s+``), so each step is
+reproducible across runs, partitionings and engines.
 """
 
 from __future__ import annotations
@@ -128,6 +132,29 @@ def drop_exact_duplicates(
     )
 
 
+#: Python-side twin of the JVM/RE2 ``\s+`` tokenizer split: with
+#: ``re.ASCII``, ``\s`` is exactly ``[ \t\n\x0b\f\r]`` — the same class
+#: Java regex and DuckDB's RE2 match — so vectorized UDFs tokenize
+#: identically to :func:`operators.text.tokens` on any input, including
+#: non-ASCII whitespace (NBSP, U+2003, U+2028), which Python's
+#: ``str.split()`` would eat.
+_ASCII_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _ascii_tokens(text) -> list[str]:
+    """The tokens :func:`operators.text.tokens` yields for ``text``: the
+    ASCII-``\\s+`` split with its empty edge pieces trimmed. NULL text has
+    no tokens. Every Arrow UDF in this module tokenizes through here."""
+    if not isinstance(text, str):
+        return []
+    toks = _ASCII_WS.split(text)
+    if toks and toks[0] == "":
+        toks.pop(0)
+    if toks and toks[-1] == "":
+        toks.pop()
+    return toks
+
+
 def _shingle_array_udf(n: int):
     """Arrow-batched (per-text → distinct word n-gram list) pandas UDF.
 
@@ -135,10 +162,9 @@ def _shingle_array_udf(n: int):
     an interpreted higher-order function (transform + element_at×n +
     array_distinct — not codegen'd, ~µs per lambda step), which dominates
     wall time for shingle-explode consumers. A vectorized-batch Python
-    set build is ~6× faster end to end (same measurement as
-    ``minhash_signatures_arrow``). Semantics are identical: whitespace
-    tokenization, first-occurrence-distinct grams, docs with fewer than
-    ``n`` tokens get an empty list.
+    set build is ~6× faster end to end. Semantics are identical: ASCII
+    whitespace tokenization (:func:`_ascii_tokens`), first-occurrence-
+    distinct grams, docs with fewer than ``n`` tokens get an empty list.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -146,7 +172,7 @@ def _shingle_array_udf(n: int):
     def sh_udf(texts: pd.Series) -> pd.Series:
         out = []
         for text in texts:
-            toks = text.split() if text else []
+            toks = _ascii_tokens(text)
             if len(toks) < n:
                 out.append([])
                 continue
@@ -348,186 +374,7 @@ def ngram_containment_pairs(
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
-def minhash_signatures_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Vectorized MinHash via Arrow batches (the fast path).
-
-    One 64-bit base hash per shingle (blake2b — stable across runs,
-    partitions, and Python processes), then the k permutations are
-    affine transforms of the base hash ((a_i·h + b_i) mod 2^61-1 — the
-    standard universal-hashing construction), computed as a numpy
-    (shingles × k) broadcast with a column-min reduction. ~6× faster
-    than the JVM higher-order-function fold (interpreted lambda steps
-    cost ~µs each; BLAS-style batch arithmetic costs ~ns).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.default_rng(seed)
-    MERSENNE = np.uint64((1 << 61) - 1)
-    a = rng.integers(1, 1 << 61, size=num_hashes, dtype=np.uint64)
-    b = rng.integers(0, 1 << 61, size=num_hashes, dtype=np.uint64)
-
-    @pandas_udf("array<long>")
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = text.split() if text else []
-            if len(toks) < n:
-                out.append(None)
-                continue
-            sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-            base = np.fromiter(
-                (
-                    int.from_bytes(
-                        hashlib.blake2b(s.encode(), digest_size=8).digest(), "big"
-                    )
-                    for s in sh
-                ),
-                dtype=np.uint64,
-                count=len(sh),
-            )
-            # (shingles × k) affine derivation, min per column
-            m = (base[:, None] * a[None, :] + b[None, :]) % MERSENNE
-            out.append(m.min(axis=0).astype("int64"))
-        return pd.Series(out)
-
-    df = _spread_small_input(df)
-    return df.select(
-        F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("signature")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """k-permutation MinHash signature per document, computed entirely
-    row-local (array transform + xxhash64(seed, shingle) + array_min):
-    no shuffle, no UDF. Docs with no shingles get a null signature."""
-    # Single-pass fold: one traversal of the shingle array updates all k
-    # minima via nested higher-order functions. Building k separate
-    # array_min(transform(...)) columns instead would inline (and
-    # recompute) the shingle expression k times — measured ~60× slower.
-    df = _spread_small_input(df)
-    sh_df = df.select(
-        F.col(id_col).alias("id"), shingles(text_col, n).alias("__sh")
-    )
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    sig = F.aggregate(
-        F.col("__sh"),
-        init,
-        lambda acc, s: F.zip_with(
-            acc, seeds, lambda a, i: F.least(a, F.xxhash64(i, s))
-        ),
-    )
-    return sh_df.select(
-        "id",
-        F.when(F.size(F.col("__sh")) > 0, sig).alias("signature"),
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    persist: bool = True,
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs (a < b) that collide in
-    ≥1 band, with the signature-agreement Jaccard estimate.
-
-    Two shuffles total: band-hash grouping (via self-join on the banded
-    rows) and pair dedup. For a threshold t, choose bands so that
-    (1/bands)^(rows_per_band) straddles t: more bands ⇒ lower effective
-    threshold, more candidates.
-    """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    if persist:
-        # the self-join below evaluates its input twice; without a persist
-        # the full signature computation is recomputed on both sides
-        # (measured 45× slower at sf0.1). The eager count matters too:
-        # both join sides otherwise race to fill the cache concurrently,
-        # computing signatures twice in parallel.
-        signatures = cache.track(signatures, eager=True)
-    banded = signatures.where(F.col("signature").isNotNull()).select(
-        "id",
-        "signature",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.xxhash64(
-                            F.lit(j), *[F.col("signature")[j * r + k] for k in range(r)]
-                        ).alias("bh"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bandrow"),
-    ).select("id", "signature", F.col("bandrow.band").alias("band"), F.col("bandrow.bh").alias("bh"))
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.signature").alias("sig_a"),
-            F.col("b.signature").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-        )
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (agree.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
-    )
-
-
-def minhash_near_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """End-to-end near-dup detection: signatures → LSH candidates →
-    signature-estimate filter. The verify-with-exact-Jaccard refinement is
-    ``ngram_jaccard_pairs`` restricted to these candidates."""
-    sigs = minhash_signatures_arrow(df, id_col, text_col, n, num_hashes)
-    cands = lsh_candidate_pairs(sigs, num_hashes, bands)
-    return cands.where(F.col("est_jaccard") >= threshold)
-
-
-# ---------------------------------------------------------------------------
-# Cross-engine-deterministic MinHash (md5-derived) — the oracled variant
+# MinHash + LSH (md5-derived, cross-engine-deterministic)
 # ---------------------------------------------------------------------------
 
 #: Modulus for the md5-derived affine MinHash permutations: the Mersenne
@@ -536,14 +383,6 @@ def minhash_near_duplicates(
 #: minima keep per-shingle collision probability ≈ 2⁻³¹, negligible for
 #: signature quality.
 MINHASH_MERSENNE31 = (1 << 31) - 1
-
-#: Python-side twin of the JVM/RE2 ``\s+`` tokenizer split: with
-#: ``re.ASCII``, ``\s`` is exactly ``[ \t\n\x0b\f\r]`` — the same class
-#: Java regex and DuckDB's RE2 match — so vectorized UDFs tokenize
-#: identically to :func:`operators.text.tokens` on any input, including
-#: non-ASCII whitespace (which Python's ``str.split()`` would eat).
-_ASCII_WS = re.compile(r"\s+", re.ASCII)
-
 
 def _md5_long60_py(s: str) -> int:
     """Driver-side twin of the certified cross-engine md5→int idiom:
@@ -580,10 +419,11 @@ def _minhash_md5_sig_udf(n: int, num_hashes: int):
     form (guide §4.2: batch the custom arithmetic through NumPy instead
     of 64 interpreted aggregate expressions per exploded row).
 
-    Per text: whitespace tokens, distinct word n-grams, 60-bit md5 base
-    hash per gram (``int(md5(g)[:15 hex], 16) % M`` — computed from the
-    digest bytes, same value), then all ``num_hashes`` affine minima in
-    one (k × g) NumPy broadcast: products stay < 2⁶² so int64 is exact.
+    Per text: ASCII-whitespace tokens (:func:`_ascii_tokens`), distinct
+    word n-grams, 60-bit md5 base hash per gram (``int(md5(g)[:15 hex],
+    16) % M`` — computed from the digest bytes, same value), then all
+    ``num_hashes`` affine minima in one (k × g) NumPy broadcast: products
+    stay < 2⁶² so int64 is exact.
     Docs with < n tokens (or NULL text) yield NULL signatures, filtered
     by the caller."""
     from pyspark.sql.functions import pandas_udf
@@ -598,20 +438,9 @@ def _minhash_md5_sig_udf(n: int, num_hashes: int):
         a = np.array([c[0] for c in coeffs], dtype=np.int64)[:, None]
         b = np.array([c[1] for c in coeffs], dtype=np.int64)[:, None]
         md5 = hashlib.md5
-        # ASCII \s ≡ Java \s ≡ RE2 \s == [ \t\n\x0b\f\r] — the JVM
-        # twin splits on Java \s+ and the DuckDB oracles on RE2 \s+,
-        # neither of which matches Unicode whitespace (NBSP, U+2028),
-        # while Python str.split() does (ADVICE r14): tokenize with the
-        # same ASCII class so non-ASCII-whitespace docs keep the
-        # cross-engine-identical signature contract.
-        ws = _ASCII_WS.split
         out = []
         for text in texts:
-            toks = ws(text) if isinstance(text, str) else []
-            if toks and toks[0] == "":
-                toks.pop(0)
-            if toks and toks[-1] == "":
-                toks.pop()
+            toks = _ascii_tokens(text)
             if len(toks) < n:
                 out.append(None)
                 continue
@@ -672,18 +501,25 @@ def lsh_candidate_pairs_exact(
     signatures: DataFrame,
     num_hashes: int = 64,
     bands: int = 16,
-    persist: bool = True,
 ) -> DataFrame:
-    """Banded candidate pairs with HASH-FREE band keys: the key is the
-    plain ``"band,v1,..,vr"`` value string, so a SQL oracle reproduces
-    the banding verbatim (``array_to_string(list_slice(sig,..), ',')``)
-    — no xxhash64 on the grouping path. Semantics and output schema
-    match :func:`lsh_candidate_pairs`.
+    """Band the signatures and emit candidate pairs (a < b) that collide in
+    ≥1 band, with the signature-agreement Jaccard estimate ``est_jaccard``.
+
+    Band keys are HASH-FREE: the key is the plain ``"band,v1,..,vr"``
+    value string, so a SQL oracle reproduces the banding verbatim
+    (``array_to_string(list_slice(sig,..), ',')``). For a threshold t,
+    choose bands so that (1/bands)^(rows_per_band) straddles t (see
+    :func:`plan_lsh_bands`): more bands ⇒ lower effective threshold, more
+    candidates.
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    if persist:
-        signatures = cache.track(signatures, eager=True)
+    # the self-join below evaluates its input twice; without a persist
+    # the full signature computation is recomputed on both sides
+    # (measured 45× slower at sf0.1). The eager count matters too: both
+    # join sides otherwise race to fill the cache concurrently, computing
+    # signatures twice in parallel.
+    signatures = cache.track(signatures, eager=True)
     banded = signatures.where(F.col("signature").isNotNull()).select(
         "id",
         "signature",
@@ -738,7 +574,9 @@ def minhash_near_duplicates_md5(
 ) -> DataFrame:
     """End-to-end near-dup detection on the DETERMINISTIC md5 path —
     bit-for-bit oracle-able in DuckDB (the m8 graduation, VERDICT r07
-    item 1). Same pipeline shape as :func:`minhash_near_duplicates`."""
+    item 1): signatures → LSH candidates → signature-estimate filter. The
+    verify-with-exact-Jaccard refinement is ``ngram_jaccard_pairs``
+    restricted to these candidates."""
     sigs = minhash_signatures_md5(df, id_col, text_col, n, num_hashes)
     cands = lsh_candidate_pairs_exact(sigs, num_hashes, bands)
     return cands.where(F.col("est_jaccard") >= threshold)
@@ -856,66 +694,23 @@ def dedup_by_clusters(df: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """64-bit SimHash over whitespace tokens (term-frequency weighted by
-    repetition, since the token array keeps duplicates). Row-local:
-    64 bit-sums over the token-hash array via higher-order functions."""
-    from novi_pdq_etl_project_prod_spark.operators.text import tokens
 
-    # Same single-pass-fold shape as minhash_signatures: hash each token
-    # once, then one traversal updates all 64 bit-sums.
-    df = _spread_small_input(df)
-    th_df = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("__th"),
-    )
-    bits = F.sequence(F.lit(0), F.lit(63))
-    bit_sums = F.aggregate(
-        F.col("__th"),
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            bits,
-            lambda a, b: a + (F.bit_get(h, b) * 2 - 1).cast("int"),
-        ),
-    )
-    # Assemble the 64-bit value as two 32-bit halves: a single fold with
-    # acc*2+bit would overflow signed long on the top bit (ANSI throws).
-    sig_bits = F.transform(bit_sums, lambda s: (s > 0).cast("long"))
-    half = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda acc, bit: acc * 2 + bit
-    )
-    hi = half(F.slice(sig_bits, 1, 32))
-    lo = half(F.slice(sig_bits, 33, 32))
-    sig = F.shiftleft(hi, 32).bitwiseOR(lo)
-    return th_df.select(
-        "id",
-        F.when(F.size(F.col("__th")) > 0, sig).alias("simhash"),
-    )
+#: Banding of the 60-bit md5 SimHash: 4 chunks × 15 bits. By pigeonhole
+#: any pair within hamming distance 3 (= chunks − 1) matches exactly on
+#: at least one chunk.
+SIMHASH_CHUNKS = 4
+SIMHASH_CHUNK_BITS = 15
+SIMHASH_MAX_HAMMING = SIMHASH_CHUNKS - 1
 
 
-def simhash_near_duplicates(
-    signatures: DataFrame,
-    max_hamming: int = 3,
-    persist: bool = True,
-    n_chunks: int = 4,
-    chunk_bits: int = 16,
-) -> DataFrame:
-    """Candidate pairs within a hamming ball: band the signature into
-    ``n_chunks`` × ``chunk_bits``-bit chunks (defaults cover the 64-bit
-    signature; the md5 60-bit variant passes 4 × 15); by pigeonhole any
-    pair with hamming ≤ n_chunks − 1 matches exactly on ≥1 chunk.
-    Exact-match join per chunk, then filter by true hamming distance
-    (bit_count of xor)."""
-    assert max_hamming <= n_chunks - 1, "pigeonhole needs hamming < n_chunks"
-    mask = (1 << chunk_bits) - 1
-    if persist:
-        # self-join input is evaluated twice (see lsh_candidate_pairs)
-        signatures = cache.track(signatures, eager=True)
+def simhash_near_duplicates(signatures: DataFrame) -> DataFrame:
+    """Pairs (a < b) of :func:`simhash_signatures_md5` signatures within
+    hamming distance ``SIMHASH_MAX_HAMMING``: exact-match join per
+    ``SIMHASH_CHUNK_BITS``-bit chunk, then filter by true hamming
+    distance (bit_count of xor)."""
+    mask = (1 << SIMHASH_CHUNK_BITS) - 1
+    # self-join input is evaluated twice (see lsh_candidate_pairs_exact)
+    signatures = cache.track(signatures, eager=True)
     chunks = signatures.where(F.col("simhash").isNotNull()).select(
         "id",
         "simhash",
@@ -924,11 +719,11 @@ def simhash_near_duplicates(
                 *[
                     F.struct(
                         F.lit(j).alias("chunk"),
-                        F.shiftrightunsigned(F.col("simhash"), j * chunk_bits)
+                        F.shiftrightunsigned(F.col("simhash"), j * SIMHASH_CHUNK_BITS)
                         .bitwiseAND(F.lit(mask))
                         .alias("ch"),
                     )
-                    for j in range(n_chunks)
+                    for j in range(SIMHASH_CHUNKS)
                 ]
             )
         ).alias("c"),
@@ -952,7 +747,7 @@ def simhash_near_duplicates(
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return pairs.select("id_a", "id_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
+        F.col("hamming") <= SIMHASH_MAX_HAMMING
     )
 
 
@@ -979,15 +774,10 @@ def _simhash_md5_sig_udf(bits: int):
     @pandas_udf("long")
     def sig_udf(texts: pd.Series) -> pd.Series:
         md5 = hashlib.md5
-        ws = _ASCII_WS.split
         weights = (1 << np.arange(bits, dtype=np.int64))
         out = []
         for text in texts:
-            toks = ws(text) if isinstance(text, str) else []
-            if toks and toks[0] == "":
-                toks.pop(0)
-            if toks and toks[-1] == "":
-                toks.pop()
+            toks = _ascii_tokens(text)
             if not toks:
                 out.append(None)
                 continue
@@ -1028,8 +818,7 @@ def simhash_signatures_md5(
     threshold, bit packing — is replicable in DuckDB SQL; the m9
     graduation, VERDICT r07 item 1). 60 bits instead of 64: the md5
     idiom yields 60, and a 60-bit simhash bands into 4 × 15-bit chunks
-    with the same pigeonhole guarantee. :func:`simhash_signatures`
-    (xxhash64, interpreted fold) remains the no-oracle alternative.
+    with the same pigeonhole guarantee (:func:`simhash_near_duplicates`).
 
     Execution (optimization r15, guide §4.2): ONE Arrow-vectorized
     map pass (:func:`_simhash_md5_sig_udf`) — tokenize, md5, all

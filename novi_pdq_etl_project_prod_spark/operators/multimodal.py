@@ -378,11 +378,6 @@ def _png_encode(arr) -> bytes:
     )
 
 
-def _png_encode_gray(arr) -> bytes:
-    """Grayscale wrapper over :func:`_png_encode` ((h, w) input)."""
-    return _png_encode(arr.reshape(*arr.shape, 1))
-
-
 def _jpeg_dimensions(payload: bytes) -> "tuple[int, int, int] | None":
     """Header-level JPEG dimension extraction (VERDICT r05 item 7):
     marker-segment walk to the first SOF frame header → (width, height,

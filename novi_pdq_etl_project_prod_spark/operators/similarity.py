@@ -163,17 +163,6 @@ def random_hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]
     return rng.standard_normal((nbits, dim)).tolist()
 
 
-def hyperplane_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id: bit b = sign(vec · plane_b)."""
-    bits = [
-        (dot(vec_col, F.array(*[F.lit(float(x)) for x in plane])) > 0).cast("long")
-        for plane in planes
-    ]
-    return F.aggregate(
-        F.array(*bits), F.lit(0).cast("long"), lambda acc, bit: acc * 2 + bit
-    )
-
-
 def hyperplane_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

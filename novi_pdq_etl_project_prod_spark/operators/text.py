@@ -382,18 +382,6 @@ def mean_token_length(col: Column | str) -> Column:
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard quality-signal columns. Pure projection — no
-    shuffle; fuses into the scan."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_chars_measured", F.length(F.col(text_col)))
-        .withColumn("distinct_ratio", distinct_token_ratio(text_col))
-        .withColumn("stopword_frac", stopword_ratio(text_col))
-        .withColumn("mean_tok_len", mean_token_length(text_col))
-    )
-
-
 def language_score(col: Column | str, wordlist: Sequence[str]) -> Column:
     """Hit count of ``wordlist`` members among the tokens — the building
     block of the n-gram/wordlist language-ID heuristic."""

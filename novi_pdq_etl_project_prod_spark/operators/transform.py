@@ -164,14 +164,3 @@ def enforce_monthly_grain(
     # restore reference column order: attrs, keys-interleaved layout is
     # (keys..., attrs..., measures...) here; order is cosmetic for parquet
     return out
-
-
-def duplicate_groups(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
-    """A2/P7 — duplicate-group diagnostic: key groups with count > 1,
-    largest first (reference ``transform_lease.py:112-118``)."""
-    return (
-        df.groupBy(*[F.col(k) for k in keys])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-        .orderBy(F.desc("n"), *[F.col(k) for k in keys])
-    )

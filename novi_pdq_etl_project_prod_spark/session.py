@@ -232,20 +232,6 @@ def read_events(spark: SparkSession, sf_dir: str):
     return read_table(spark, sf_dir, "events")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read the driver-provided parquet tables and register temp views.
-
-    Returns a dict name -> DataFrame. Scans stay lazily declared so Catalyst
-    can push filters/projections into the parquet reader.
-    """
-    out = {}
-    for name in names:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def cluster_conf(
     executors: int,
     cores_per_executor: int = 4,

@@ -12,7 +12,7 @@ JVM-side codegen'd expressions, no Python in the loop.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,10 +68,3 @@ def parse_raw_json(
         F.from_json(F.col(raw_col), schema).alias("j"),
     )
     return parsed.select(*[F.col(c) for c in keep_cols], F.col("j.*"))
-
-
-def get_json_field(col: Column | str, path: str) -> Column:
-    """Single-field JSON extraction (``get_json_object``) for ad-hoc probes
-    into raw payloads without a full schema parse."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, path)

@@ -8,12 +8,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from novi_pdq_etl_project_prod_spark.operators.dedup import (
+    _exploded_shingles_arrow,
     drop_exact_duplicates,
     exact_duplicates,
-    minhash_near_duplicates,
+    minhash_near_duplicates_md5,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
-    simhash_signatures,
+    simhash_signatures_md5,
 )
 from novi_pdq_etl_project_prod_spark.operators.similarity import (
     brute_force_topk,
@@ -40,7 +41,7 @@ def test_minhash_recall_against_exact_jaccard(spark):
     assert truth, "fixture should contain planted near-duplicates"
     found = {
         (r.id_a, r.id_b)
-        for r in minhash_near_duplicates(docs, threshold=0.5).collect()
+        for r in minhash_near_duplicates_md5(docs, threshold=0.5).collect()
     }
     recall = len(truth & found) / len(truth)
     assert recall >= 0.9, f"minhash recall {recall} over {len(truth)} true pairs"
@@ -60,10 +61,8 @@ def test_simhash_finds_near_dups(spark):
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(docs, threshold=0.9, df_cap=None).collect()
     }
-    sigs = simhash_signatures(docs)
-    found = {
-        (r.id_a, r.id_b) for r in simhash_near_duplicates(sigs, max_hamming=3).collect()
-    }
+    sigs = simhash_signatures_md5(docs)
+    found = {(r.id_a, r.id_b) for r in simhash_near_duplicates(sigs).collect()}
     # simhash hamming<=3 is a tighter notion than jaccard>=0.9; require
     # that what it finds is real and that it finds a meaningful share
     assert found, "simhash should find some near-dup pairs in the fixture"
@@ -73,9 +72,46 @@ def test_simhash_finds_near_dups(spark):
 
 def test_simhash_signature_is_deterministic(spark):
     docs = _docs(spark).limit(50)
-    a = {r.id: r.simhash for r in simhash_signatures(docs).collect()}
-    b = {r.id: r.simhash for r in simhash_signatures(docs.repartition(7)).collect()}
+    a = {r.id: r.simhash for r in simhash_signatures_md5(docs).collect()}
+    b = {
+        r.id: r.simhash
+        for r in simhash_signatures_md5(docs.repartition(7)).collect()
+    }
     assert a == b
+
+
+def test_arrow_shingles_tokenize_like_jvm_shingles(spark):
+    """The Arrow shingle path splits on ASCII ``\\s+`` only, exactly like
+    the JVM ``shingles()`` expression and the DuckDB oracles: NBSP,
+    U+2003 and U+2028 stay inside a token (Python ``str.split()`` would
+    split on them and emit extra grams)."""
+    from novi_pdq_etl_project_prod_spark.operators.text import shingles
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha\u00a0beta gamma delta"),
+            (2, "one two\u2003three four"),
+            (3, "first\u2028second third fourth fifth"),
+            (4, " \tplain  ascii\nwhitespace\x0bonly here\r\n"),
+            (5, "too\u00a0short"),
+            (6, ""),
+        ],
+        "doc_id long, text string",
+    )
+    arrow = sorted(
+        map(tuple, _exploded_shingles_arrow(docs, "doc_id", "text", 3).collect())
+    )
+    jvm = sorted(
+        map(
+            tuple,
+            docs.select(
+                F.col("doc_id").alias("id"),
+                F.explode(shingles("text", 3)).alias("sh"),
+            ).collect(),
+        )
+    )
+    assert arrow == jvm
+    assert [sh for i, sh in arrow if i == 1] == ["alpha\u00a0beta gamma delta"]
 
 
 def test_lsh_topk_recall_vs_brute_force(spark):

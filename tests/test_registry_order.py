@@ -3,7 +3,9 @@
 The driver verifies exactly the first 50 registry keys each round
 (CORRECTNESS_r01/r02 behavior). VERDICT r02 item 1/7: every query that has
 never had a driver row must sit inside that window, and net-new additions
-must not push an uncertified query out of it.
+must not push an uncertified query out of it. The ordering lives in the
+``__spark_entry__`` adapter; the catalog itself is a plain module-order
+merge.
 """
 
 import json
@@ -11,12 +13,17 @@ import pathlib
 
 import pytest
 
-from novi_pdq_etl_project_prod_spark.catalog import DRIVER_CERTIFIED, ORACLES, QUERIES
+import __spark_entry__ as entry
+from novi_pdq_etl_project_prod_spark.catalog import ORACLES as CATALOG_ORACLES
+from novi_pdq_etl_project_prod_spark.catalog import QUERIES as CATALOG_QUERIES
 
 pytestmark = pytest.mark.fastverify
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 DRIVER_BUDGET = 50
+QUERIES = entry.queries()
+ORACLES = entry.oracle_sql()
+DRIVER_CERTIFIED = entry._derive_driver_certified()
 
 
 def _driver_rows() -> set:
@@ -55,7 +62,7 @@ def test_recertify_entries_lead_the_window():
     the RECERTIFY literal) even though green driver rows exist — their
     rows predate the current execution. Budget check: the re-entry set
     plus any genuinely-uncertified queries must fit the window."""
-    from novi_pdq_etl_project_prod_spark.catalog import RECERTIFY
+    RECERTIFY = entry.RECERTIFY
 
     first_window = set(list(QUERIES)[:DRIVER_BUDGET])
     uncertified = {q for q in QUERIES if q not in DRIVER_CERTIFIED}
@@ -71,8 +78,9 @@ def test_recertify_entries_lead_the_window():
 
 
 def test_certified_list_matches_correctness_files():
-    """DRIVER_CERTIFIED is exactly the union of CORRECTNESS_r*.json rows
-    that exist in the catalog (a row may cover a since-renamed query)."""
+    """The adapter's certified set is exactly the union of
+    CORRECTNESS_r*.json rows that exist in the catalog (a row may cover
+    a since-renamed query); ``_driver_rows`` is its independent twin."""
     rows = _driver_rows() & set(QUERIES)
     assert rows == set(DRIVER_CERTIFIED) & set(QUERIES), (
         "certified-list drift: "
@@ -86,8 +94,9 @@ def test_ledger_derivation_survives_future_driver_rounds(tmp_path):
     correct when the driver drops NEXT-round artifacts into the repo root.
     Simulated in a tmp root: an r07 file that greens one query, reds a
     previously-green one, and adds a no_oracle row — latest-wins on all
-    three, no crash on a malformed extra file."""
-    from novi_pdq_etl_project_prod_spark.catalog import _derive_driver_certified
+    three, no crash on a malformed extra file. With no artifacts at all
+    the certified set is empty (every query leads the registry)."""
+    _derive_driver_certified = entry._derive_driver_certified
 
     (tmp_path / "CORRECTNESS_r06.json").write_text(json.dumps({
         "old_green": {"hash_match": True, "rows_match": True, "err": None},
@@ -102,7 +111,23 @@ def test_ledger_derivation_survives_future_driver_rounds(tmp_path):
     (tmp_path / "CORRECTNESS_r08.json").write_text("not json {")
     certified = _derive_driver_certified(tmp_path)
     assert certified == {"old_green", "new_green", "new_sketch"}
-    assert _derive_driver_certified(tmp_path / "empty-missing") is None
+    assert _derive_driver_certified(tmp_path / "empty-missing") == set()
+
+
+def test_adapter_reorders_the_plain_catalog():
+    """The adapter's registry is a permutation of the catalog's plain
+    module-order merge: same keys and callables, same oracle SQL, and
+    the certified tail keeps catalog order."""
+    assert set(QUERIES) == set(CATALOG_QUERIES)
+    assert all(QUERIES[q] is CATALOG_QUERIES[q] for q in QUERIES)
+    assert ORACLES == CATALOG_ORACLES
+    assert list(ORACLES) == [q for q in QUERIES if q in CATALOG_ORACLES]
+    lead = {q for q in QUERIES if q not in DRIVER_CERTIFIED} | entry.RECERTIFY
+    tail = [q for q in QUERIES if q not in lead]
+    assert tail == [q for q in CATALOG_QUERIES if q not in lead]
+    assert list(QUERIES)[: len(QUERIES) - len(tail)] == [
+        q for q in CATALOG_QUERIES if q in lead
+    ]
 
 
 def test_every_query_has_oracle_or_documented_exception():

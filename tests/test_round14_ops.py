@@ -29,10 +29,8 @@ def test_ledger_graduation_reenters_window(tmp_path):
     ORACLES, the stale row no longer covers the new oracle surface and
     the query must read as UNcertified (re-entering the first-50
     window) until the driver hash-greens it."""
-    from novi_pdq_etl_project_prod_spark.catalog import (
-        ORACLES,
-        _derive_driver_certified,
-    )
+    from __spark_entry__ import _derive_driver_certified
+    from novi_pdq_etl_project_prod_spark.catalog import ORACLES
 
     grad = "m35_kmeans_clusters"  # the round-13 graduation
     assert grad in ORACLES
@@ -67,15 +65,11 @@ def test_m35_window_reentry_delivered():
     import json
     import pathlib
 
-    from novi_pdq_etl_project_prod_spark.catalog import (
-        DRIVER_CERTIFIED,
-        ORACLES,
-        QUERIES,
-    )
+    import __spark_entry__ as entry
 
     name = "m35_kmeans_clusters"
-    assert name in ORACLES  # the graduation itself
-    if name in DRIVER_CERTIFIED:
+    assert name in entry.oracle_sql()  # the graduation itself
+    if name in entry._derive_driver_certified():
         # graduated out of the window because a driver round hash-greened
         # the new oracle surface — verify that row really exists
         repo = pathlib.Path(__file__).resolve().parents[1]
@@ -86,7 +80,7 @@ def test_m35_window_reentry_delivered():
                 green = bool(row.get("hash_match"))
         assert green, "certified without a hash-green driver row"
     else:
-        assert name in list(QUERIES)[:50]
+        assert name in list(entry.queries())[:50]
 
 
 # ---------------------------------------------------------------------------
