@@ -64,15 +64,12 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # fixture-scale parallelism: single small parquet files would give
         # 1-partition scans (whole query on one core). 8 MB split size
-        # spreads even sf0.1 files across the local cores; on a real
-        # cluster with TB-scale inputs, raise back toward the 128 MB
-        # default via SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
-        )
+        # spreads even sf0.1 files across the local cores; a real
+        # cluster with TB-scale inputs passes cluster_conf() (or its own
+        # values) as extra_conf, which overrides these defaults.
+        .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
     )
     if master:
         builder = builder.master(master)

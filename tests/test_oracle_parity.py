@@ -3,104 +3,31 @@
 This mirrors the driver's t2 correctness gate (BASELINE.md) but with exact
 value equality — stricter than the driver's hash.
 
-Runtime (VERDICT r07 item 8): a FULL run shards the catalog across
-``SPARK_GRAFT_PARITY_SHARDS`` worker processes (default 4), each with its
-own SparkSession — parity checks values, not walls, so concurrency is
-safe (bench timings stay serialized). Selective runs (``-k`` picking a
-handful of queries) stay inline on the shared session so a single-query
-check doesn't pay for a full sharded sweep. Each parametrized test still
+A full run checks the catalog in the sharded sweep of ``tests/sweep.py``,
+whose worker count and heap come from the host's CPUs and RAM; a ``-k``
+selection of fewer than ``sweep.MIN_SELECTED`` parity and invariance
+tests is checked inline on the shared session. Each parametrized test
 asserts its own query's report either way.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-import tempfile
-
 import pytest
 
 from novi_pdq_etl_project_prod_spark.catalog import ORACLES, QUERIES
+from tests import sweep
 from tests.conftest import SF_ORACLE
 
 #: the fast verify lane (VERDICT r14 #1): exact-value parity is the
 #: core certification — `pytest tests/ -m fastverify` runs in <5 min
 pytestmark = pytest.mark.fastverify
-from tests.oracle_harness import compare_query
 
 ORACLED = sorted(ORACLES)
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-#: Default shard count scales with the box (VERDICT r08 item 4): 8 on a
-#: 32-core machine. Workers run 8 Spark threads each — oversubscription
-#: is fine here because parity checks VALUES, not walls, and much of a
-#: worker's wall is single-threaded DuckDB + Python compare.
-PARITY_SHARDS = int(
-    os.environ.get("SPARK_GRAFT_PARITY_SHARDS")
-    or max(2, min(8, (os.cpu_count() or 8) // 4))
-)
-#: Below this many selected parity tests the sharded path costs more
-#: than it saves (full-catalog workers) — run inline instead.
-SHARD_MIN_SELECTED = 24
-
-
-def _run_sharded(n_shards: int) -> dict[str, dict]:
-    from tools.parity_worker import shard_assignment
-
-    assignment = shard_assignment(ORACLED, n_shards)
-    tmp = tempfile.mkdtemp(prefix="parity_shards_")
-    procs = []
-    for i in range(n_shards):
-        out = os.path.join(tmp, f"shard{i}.json")
-        env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-        procs.append(
-            (
-                i,
-                out,
-                subprocess.Popen(
-                    [
-                        sys.executable,
-                        os.path.join(REPO, "tools", "parity_worker.py"),
-                        str(i),
-                        str(n_shards),
-                        out,
-                        SF_ORACLE,
-                    ],
-                    env=env,
-                ),
-            )
-        )
-    reports: dict[str, dict] = {}
-    for i, out, p in procs:
-        rc = p.wait()
-        if rc != 0 or not os.path.exists(out):
-            for name in assignment[i]:
-                reports.setdefault(
-                    name, {"match": False, "detail": f"shard {i} died rc={rc}"}
-                )
-            continue
-        with open(out, encoding="utf-8") as fh:
-            reports.update(json.load(fh))
-    return reports
-
-
-@pytest.fixture(scope="session")
-def parity_reports(request):
-    selected = getattr(request.config, "_parity_selected", 0)
-    if PARITY_SHARDS < 2 or selected < SHARD_MIN_SELECTED:
-        return None
-    return _run_sharded(PARITY_SHARDS)
 
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_oracle_parity(spark, parity_reports, name):
-    if parity_reports is None:
-        report = compare_query(spark, QUERIES[name], ORACLES[name], SF_ORACLE)
-    else:
-        report = parity_reports.get(
-            name, {"match": False, "detail": "missing from shard output"}
-        )
+def test_oracle_parity(spark, sweep_reports, name):
+    report = sweep.report(spark, sweep_reports, "parity", name)
     assert report["match"], f"{name}: {report}"
 
 

@@ -20,26 +20,20 @@ boundary effects in the vectorized ops.
 sf0.001 keeps the sweep minutes-scale; the layout delta, not the data
 volume, is what exercises the failure mode.
 
-Runtime (VERDICT r08 item 4): a FULL run shards the catalog across
-worker PROCESSES (the sweep mutates session conf, so shards need their
-own sessions — threads on the shared session would race), reusing the
-parity-shard LPT balancing. Selective ``-k`` runs stay inline.
+A full run checks the catalog in the sharded sweep of ``tests/sweep.py``
+(one worker pool shared with the oracle-parity tests, sized from the
+host's CPUs and RAM); a ``-k`` selection of fewer than
+``sweep.MIN_SELECTED`` parity and invariance tests is checked inline on
+the shared session.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-import tempfile
-
 import pytest
 
 from novi_pdq_etl_project_prod_spark.catalog import ORACLES, QUERIES
-from tests.conftest import SF_SMOKE
+from tests import sweep
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ORACLED = sorted(ORACLES)
 #: No-oracle queries are *also* seeded-deterministic by design — LSH/
 #: MinHash signatures are pure row functions, top-k windows tie-break on
@@ -50,91 +44,14 @@ ORACLED = sorted(ORACLES)
 #: hidden — as of this round both pass at fixture scale.
 NO_ORACLE = sorted(q for q in QUERIES if q not in ORACLES)
 
-INV_SHARDS = int(
-    os.environ.get("SPARK_GRAFT_INV_SHARDS")
-    or max(2, min(8, (os.cpu_count() or 8) // 4))
-)
-#: Below this many selected tests the sharded path costs more than it
-#: saves — run inline on the shared session instead.
-SHARD_MIN_SELECTED = 24
 
-
-def _run_sharded(n_shards: int) -> dict[str, dict]:
-    from tools.parity_worker import shard_assignment
-
-    assignment = shard_assignment(sorted(QUERIES), n_shards)
-    tmp = tempfile.mkdtemp(prefix="inv_shards_")
-    procs = []
-    for i in range(n_shards):
-        out = os.path.join(tmp, f"shard{i}.json")
-        env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-        procs.append(
-            (
-                i,
-                out,
-                subprocess.Popen(
-                    [
-                        sys.executable,
-                        os.path.join(REPO, "tools", "invariance_worker.py"),
-                        str(i),
-                        str(n_shards),
-                        out,
-                        SF_SMOKE,
-                    ],
-                    env=env,
-                ),
-            )
-        )
-    reports: dict[str, dict] = {}
-    for i, out, p in procs:
-        rc = p.wait()
-        if rc != 0 or not os.path.exists(out):
-            for name in assignment[i]:
-                reports.setdefault(
-                    name, {"match": False, "detail": f"shard {i} died rc={rc}"}
-                )
-            continue
-        with open(out, encoding="utf-8") as fh:
-            reports.update(json.load(fh))
-    return reports
-
-
-@pytest.fixture(scope="session")
-def invariance_reports(request):
-    selected = getattr(request.config, "_invariance_selected", 0)
-    if INV_SHARDS < 2 or selected < SHARD_MIN_SELECTED:
-        return None
-    return _run_sharded(INV_SHARDS)
-
-
-def _check(spark, invariance_reports, name):
-    if invariance_reports is not None:
-        report = invariance_reports.get(
-            name, {"match": False, "detail": "missing from shard output"}
-        )
-        assert report["match"], f"{name}: {report}"
-        return
-    from tools.invariance_worker import run_layout_comparison
-
-    base = {
-        k: spark.conf.get(k)
-        for k, _, _ in __import__(
-            "tools.invariance_worker", fromlist=["LAYOUT"]
-        ).LAYOUT
-    }
-    try:
-        report = run_layout_comparison(spark, name, SF_SMOKE)
-    finally:
-        for k, v in base.items():
-            spark.conf.set(k, v)
+@pytest.mark.parametrize("name", ORACLED)
+def test_partitioning_invariance(spark, sweep_reports, name):
+    report = sweep.report(spark, sweep_reports, "invariance", name)
     assert report["match"], f"{name}: {report}"
 
 
-@pytest.mark.parametrize("name", ORACLED)
-def test_partitioning_invariance(spark, invariance_reports, name):
-    _check(spark, invariance_reports, name)
-
-
 @pytest.mark.parametrize("name", NO_ORACLE)
-def test_partitioning_invariance_no_oracle(spark, invariance_reports, name):
-    _check(spark, invariance_reports, name)
+def test_partitioning_invariance_no_oracle(spark, sweep_reports, name):
+    report = sweep.report(spark, sweep_reports, "invariance", name)
+    assert report["match"], f"{name}: {report}"
