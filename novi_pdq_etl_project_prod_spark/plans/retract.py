@@ -52,7 +52,9 @@ retraction taxes every later writer. :func:`fold_retraction_markers`
 (:func:`retraction_applied`) consults meta first and the folded table
 second, so exactly-once membership stays EXACT — no watermark
 approximation — while the manifest doc stays bounded.
-``tools/retraction_marker_probe.py`` measures the growth and the fold.
+The growth and the fold are measured in
+``tools/retraction_marker_probe_r13.json`` (SCALE.md, "Round-13:
+retraction-marker growth, bounded").
 
 Post-retraction semantics (the certified claim — catalog m80/m81/m82):
 every reader sees exactly the state a from-scratch build over the
@@ -199,8 +201,9 @@ def fold_retraction_markers(
     approximated, the membership set just lives in columnar segments
     (compactable, GC'd like any table) instead of a JSON doc every
     commit rewrites. Run it from a maintenance cadence once the marker
-    population is felt in commit latency —
-    ``tools/retraction_marker_probe.py`` measures both sides.
+    population is felt in commit latency — both sides are measured in
+    ``tools/retraction_marker_probe_r13.json`` (SCALE.md, "Round-13:
+    retraction-marker growth, bounded").
 
     CAS-pinned to the manifest version the meta was read at: a
     concurrent retraction landing mid-fold conflicts loudly (retry —

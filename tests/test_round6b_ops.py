@@ -505,16 +505,14 @@ def test_stream_sample_quantile_sketch_equals_batch(spark, tmp_path):
     assert med_stream == med_batch
 
 
-def test_mann_whitney_hand_computed():
+def test_mann_whitney_hand_computed(spark):
     """Textbook tiny cases against hand-computed rank sums."""
     # no ties: A=[1,2], B=[3,4] -> R_A=3, U_A=0
     # (ranks 1..4; z = (0 - 2)/sqrt(2*2*5/12) = -2/1.29099..)
     import math
 
     from novi_pdq_etl_project_prod_spark.operators.stats import mann_whitney
-    from novi_pdq_etl_project_prod_spark.session import get_spark
 
-    spark = get_spark()
     df = spark.createDataFrame(
         [("A", 1.0), ("A", 2.0), ("B", 3.0), ("B", 4.0)], ["s", "v"]
     )

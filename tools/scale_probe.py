@@ -1,13 +1,17 @@
-"""Scale probe: measure headline-query scaling beyond the provided
-fixtures by self-replicating sf0.1 with key offsets (10× ≈ sf1: 6M
-lineitem rows) into /tmp, then timing the same catalog queries.
+"""Scale replicas and the full-catalog ×K sweep.
 
-This validates the 100 TB design claims empirically at the largest scale
-the machine holds: wall-clock should grow ~linearly for scans/aggs and
-stay shuffle-bound (not quadratic) for joins and LSH ops. Results land
-in SCALE.md.
+The builders self-replicate a fixture directory (``SRC``, sf0.1) K
+times without replication artifacts: facts and events key-shifted,
+documents token-suffixed, embeddings isometric, dims fixed. 10× ≈ sf1
+(6M lineitem rows). ``tools/bench_scaled.py`` builds its ×10 board from
+``replicate_full``.
 
-Usage: python tools/scale_probe.py [replication_factor]
+``--full K`` times EVERY catalog query at sf0.1 and at ×K, records the
+growth ratios to ``$SPARK_GRAFT_SWEEP_OUT`` (resumable: queries already
+in the JSON are skipped) and prints the outlier triage. Results land in
+SCALE.md.
+
+Usage: python tools/scale_probe.py --full [replication_factor]
 """
 
 from __future__ import annotations
@@ -27,66 +31,52 @@ from novi_pdq_etl_project_prod_spark.catalog import QUERIES
 from novi_pdq_etl_project_prod_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
-PROBE_QUERIES = [
-    "a1_monthly_fact",
-    "j1_star_join",
-    "t1_pricing_summary",
-    "x2_salted_agg",
-    "m1_exact_dedup_groups",
-    "m8_minhash_near_dups",
-    "t9_volume_shipping",
-    "t19_lonely_late_suppliers",
-    "m19_decontaminate",
-    "x7_gap_fill",
-    "m26_sequence_packing",
-    "d6_price_histogram",
-    "d8_heavy_hitters",
-    "x6_click_attribution",
-    "x8_native_session_window",
-]
 
 
 def replicate(spark, out_dir: str, k: int) -> None:
-    """k copies of the fact tables with shifted keys; dims stay single
-    (star-schema semantics: facts grow, dims don't)."""
+    """k copies of lineitem, orders and events with shifted keys; dims
+    stay single (star-schema semantics: facts grow, dims don't).
+    Documents and embeddings come from the two builders below."""
     li = spark.read.parquet(f"{SRC}/lineitem.parquet")
     o = spark.read.parquet(f"{SRC}/orders.parquet")
-    docs = spark.read.parquet(f"{SRC}/documents.parquet")
     # events: read ts as raw long nanos (plain BIGINT in the replica —
     # session.read_events handles either form); replicate by shifting
-    # user_id/event_id so months are unchanged but users/rows grow k×
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(f"{SRC}/events.parquet")
-    max_ok = o.agg(F.max("o_orderkey")).collect()[0][0] + 1
-    max_doc = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    max_uid = ev.agg(F.max("user_id")).collect()[0][0] + 1
-    max_eid = ev.agg(F.max("event_id")).collect()[0][0] + 1
+    # user_id/event_id so months are unchanged but users/rows grow k×.
+    # The conf holds until the writes ran, then the caller's value returns.
+    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(nanos_key, None)
+    spark.conf.set(nanos_key, "true")
+    try:
+        ev = spark.read.parquet(f"{SRC}/events.parquet")
+        max_ok = o.agg(F.max("o_orderkey")).collect()[0][0] + 1
+        max_uid = ev.agg(F.max("user_id")).collect()[0][0] + 1
+        max_eid = ev.agg(F.max("event_id")).collect()[0][0] + 1
 
-    def shifted(df, col, step, i):
-        return df.withColumn(col, F.col(col) + F.lit(i * step))
+        def shifted(df, col, step, i):
+            return df.withColumn(col, F.col(col) + F.lit(i * step))
 
-    li_k = li
-    o_k = o
-    d_k = docs
-    e_k = ev
-    for i in range(1, k):
-        li_k = li_k.unionByName(shifted(li, "l_orderkey", max_ok, i))
-        o_k = o_k.unionByName(shifted(o, "o_orderkey", max_ok, i))
-        d_k = d_k.unionByName(shifted(docs, "doc_id", max_doc, i))
-        e_k = e_k.unionByName(
-            shifted(shifted(ev, "user_id", max_uid, i), "event_id", max_eid, i)
-        )
-    li_k.write.mode("overwrite").parquet(f"{out_dir}/lineitem.parquet")
-    o_k.write.mode("overwrite").parquet(f"{out_dir}/orders.parquet")
-    d_k.write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
-    e_k.write.mode("overwrite").parquet(f"{out_dir}/events.parquet")
-    for t in ("customer", "supplier", "part", "nation", "region", "embeddings"):
+        li_k = li
+        o_k = o
+        e_k = ev
+        for i in range(1, k):
+            li_k = li_k.unionByName(shifted(li, "l_orderkey", max_ok, i))
+            o_k = o_k.unionByName(shifted(o, "o_orderkey", max_ok, i))
+            e_k = e_k.unionByName(
+                shifted(shifted(ev, "user_id", max_uid, i), "event_id", max_eid, i)
+            )
+        li_k.write.mode("overwrite").parquet(f"{out_dir}/lineitem.parquet")
+        o_k.write.mode("overwrite").parquet(f"{out_dir}/orders.parquet")
+        e_k.write.mode("overwrite").parquet(f"{out_dir}/events.parquet")
+    finally:
+        if prior is None:
+            spark.conf.unset(nanos_key)
+        else:
+            spark.conf.set(nanos_key, prior)
+    for t in ("customer", "supplier", "part", "nation", "region"):
         shutil.copy(f"{SRC}/{t}.parquet", f"{out_dir}/{t}.parquet")
 
 
-def replicate_docs_distinct(
-    spark, out_dir: str, k: int, copy_rest: bool = True
-) -> None:
+def replicate_docs_distinct(spark, out_dir: str, k: int) -> None:
     """k copies of documents with SHIFTED TOKENS, not just shifted ids:
     every token in replica i gets an ``x<i>`` suffix, so replicas are
     neither exact nor near duplicates of their source (all shingles
@@ -112,18 +102,9 @@ def replicate_docs_distinct(
         .drop("rep")
     )
     out.write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
-    if not copy_rest:
-        return
-    for t in (
-        "lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "embeddings", "events",
-    ):
-        shutil.copy(f"{SRC}/{t}.parquet", f"{out_dir}/{t}.parquet")
 
 
-def replicate_embeddings_isometric(
-    spark, out_dir: str, k: int, copy_rest: bool = True
-) -> None:
+def replicate_embeddings_isometric(spark, out_dir: str, k: int) -> None:
     """k copies of embeddings, each replica transformed by a deterministic
     ISOMETRY (coordinate rotation + sign flips keyed by the replica
     index). An isometry preserves every pairwise cosine WITHIN a replica
@@ -164,632 +145,6 @@ def replicate_embeddings_isometric(
         .drop("rep")
     )
     rot.write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
-    if not copy_rest:
-        return
-    for t in (
-        "lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "documents", "events",
-    ):
-        shutil.copy(f"{SRC}/{t}.parquet", f"{out_dir}/{t}.parquet")
-
-
-def main_embeddings(k: int) -> None:
-    """100×-embeddings probe for the ANN ops (VERDICT r02 item 3): time
-    m7/m10/m17/m24 at k× vectors AND re-measure recall at that density —
-    LSH/IVF recall degrades as neighborhoods densify, so the fixture
-    recall floors must be re-proven, not extrapolated."""
-    spark = get_spark(app_name="scale_probe_emb")
-    out_dir = tempfile.mkdtemp(prefix=f"embx{k}_")
-    t0 = time.perf_counter()
-    replicate_embeddings_isometric(spark, out_dir, k)
-    n = spark.read.parquet(f"{out_dir}/embeddings.parquet").count()
-    print(f"replicated embeddings x{k} ({n} vectors) in {time.perf_counter()-t0:.1f}s")
-
-    probe = [
-        "m7_embedding_topk",
-        "m10_lsh_embedding_topk",
-        "m17_ivf_embedding_topk",
-        "m24_embedding_lsh_pairs",
-    ]
-    results = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), (f"emb x{k}", out_dir)):
-        timings = {}
-        for name in probe:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-        results[sf_label] = timings
-        print(sf_label, json.dumps(timings))
-    for name in probe:
-        a, b = results["sf0.1"][name], results[f"emb x{k}"][name]
-        print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x vectors)")
-
-    # recall at scale: same queries (vec_id < 10), ground truth = brute
-    # force over the SCALED corpus
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["m7_embedding_topk"](spark, out_dir).collect()
-    }
-    for name in ("m10_lsh_embedding_topk", "m17_ivf_embedding_topk"):
-        approx = {
-            (r.query_id, r.neighbor_id)
-            for r in QUERIES[name](spark, out_dir).collect()
-        }
-        print(f"  {name} recall@{k}x: {len(exact & approx) / len(exact):.3f}")
-
-    # Pair-count linearity, measured in the NEAR-DUP regime (threshold
-    # 0.9): isometric replicas preserve each replica's internal near-dup
-    # pairs and add essentially no cross-replica ones, so true pairs grow
-    # ~k×. (m24's catalog threshold of 0.35 is the "related" regime,
-    # where a k×-denser corpus genuinely holds ~k² above-threshold pairs
-    # — that growth is data, not algorithm, so it can't test linearity.)
-    from novi_pdq_etl_project_prod_spark.operators.similarity import (
-        embedding_near_dup_pairs_lsh,
-    )
-
-    counts = {}
-    for label, d in (("base", SRC), ("scaled", out_dir)):
-        emb = spark.read.parquet(f"{d}/embeddings.parquet")
-        counts[label] = embedding_near_dup_pairs_lsh(
-            emb, threshold=0.9, dim=64, n_tables=16
-        ).count()
-    print(
-        f"  near-dup pairs (cos>=0.9): {counts['base']} -> {counts['scaled']} "
-        f"({counts['scaled']/max(counts['base'],1):.1f}x pairs for {k}x vectors; "
-        f"k2 artifact would be ~{k*k}x)"
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main_hybrid(k: int) -> None:
-    """×k-embedding-density probe for the ANN HYBRID family (VERDICT
-    r12 #4): time the exact multi-probe hybrid m84, the in-query IVF
-    hybrid m85, and the persisted-index hybrid m88 at k× vectors, and
-    re-measure m85's FUSED recall@10 against m84 recomputed AT THAT
-    density (ANN recall must be re-proven where neighborhoods densify,
-    not extrapolated — the m10/m17 lesson). The lexical channel reads
-    the (copied) base documents either way, so the delta isolates the
-    dense channel: m84's exact cosine goes linear in corpus size while
-    m85/m88 scan only the probed nprobe/n_lists fraction.
-
-    Output row appended to SPARK_GRAFT_HYBRID_OUT (default
-    tools/hybrid_probe_r13.json)."""
-    from collections import defaultdict
-
-    spark = get_spark(app_name="scale_probe_hybrid")
-    out_dir = tempfile.mkdtemp(prefix=f"hybx{k}_")
-    t0 = time.perf_counter()
-    replicate_embeddings_isometric(spark, out_dir, k)
-    n = spark.read.parquet(f"{out_dir}/embeddings.parquet").count()
-    print(f"replicated embeddings x{k} ({n} vectors) in "
-          f"{time.perf_counter()-t0:.1f}s")
-
-    probe = ["m84_hybrid_batch_exact", "m85_hybrid_ann",
-             "m88_hybrid_ann_persisted"]
-    results = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), (f"emb x{k}", out_dir)):
-        timings = {}
-        for name in probe:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-        results[sf_label] = timings
-        print(sf_label, json.dumps(timings))
-    for name in probe:
-        a, b = results["sf0.1"][name], results[f"emb x{k}"][name]
-        print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall "
-              f"for {k}x vectors)")
-
-    # fused recall at density: m85 (and the identical-by-construction
-    # m88) vs the exact hybrid recomputed over the SCALED corpus
-    exact, ann = defaultdict(set), defaultdict(set)
-    for r in QUERIES["m84_hybrid_batch_exact"](spark, out_dir).collect():
-        exact[r.query_id].add(r.neighbor_id)
-    for r in QUERIES["m85_hybrid_ann"](spark, out_dir).collect():
-        ann[r.query_id].add(r.neighbor_id)
-    recalls = {
-        int(q): round(len(exact[q] & ann[q]) / len(exact[q]), 3)
-        for q in exact
-    }
-    mean_recall = round(sum(recalls.values()) / len(recalls), 3)
-    print(f"  m85 fused recall@10 vs m84 at x{k}: mean {mean_recall} "
-          f"per-probe {recalls}")
-
-    out_path = os.environ.get(
-        "SPARK_GRAFT_HYBRID_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "hybrid_probe_r13.json"),
-    )
-    doc = {}
-    if os.path.exists(out_path):
-        try:
-            with open(out_path, encoding="utf-8") as fh:
-                doc = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            doc = {}
-    doc[f"x{k}"] = {
-        "n_vectors": n,
-        "walls": results,
-        "m85_fused_recall_at_10_vs_m84": {
-            "mean": mean_recall, "per_probe": recalls,
-        },
-    }
-    with open(out_path, "w", encoding="utf-8") as fh:
-        json.dump(doc, fh, indent=1)
-    print(f"wrote {out_path}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main_ivf_geometry(k: int, lists: list[int] | None = None) -> None:
-    """IVF geometry sweep at ×k embedding density (VERDICT r13 #3): the
-    round-13 ×100 probe kept the fixture geometry (n_lists=16), so
-    nprobe 4/16 searched 25% of the corpus per query — the 1.2× wall
-    growth undersold what sqrt(N) geometry shows. For each n_lists on
-    the axis (default 16 / 64 / 256 / default_n_lists(N)≈sqrt(N)) and
-    nprobe in {4, n_lists//16, n_lists//8}, build the persisted index
-    and measure build wall, probe-batch search wall, probed corpus
-    fraction, and DENSE recall@10 against exact brute force over the
-    scaled corpus. Output: tools/ivf_geometry_probe_r14.json (override
-    via SPARK_GRAFT_IVFGEO_OUT)."""
-    from collections import defaultdict
-
-    from novi_pdq_etl_project_prod_spark.operators.similarity import (
-        brute_force_topk,
-        build_ivf_index,
-        default_n_lists,
-        ivf_index_topk,
-    )
-
-    spark = get_spark(app_name="scale_probe_ivfgeo")
-    out_dir = tempfile.mkdtemp(prefix=f"ivfgeo{k}_")
-    t0 = time.perf_counter()
-    replicate_embeddings_isometric(spark, out_dir, k)
-    emb = spark.read.parquet(f"{out_dir}/embeddings.parquet")
-    n = emb.count()
-    print(f"replicated embeddings x{k} ({n} vectors) in "
-          f"{time.perf_counter()-t0:.1f}s")
-    probes = emb.where(F.col("vec_id") < 10)
-
-    t0 = time.perf_counter()
-    gt = defaultdict(set)
-    for r in brute_force_topk(emb, probes, k=10).collect():
-        gt[r.query_id].add(r.neighbor_id)
-    exact_wall = round(time.perf_counter() - t0, 2)
-    print(f"exact GT wall {exact_wall}s")
-
-    axis = lists or sorted({16, 64, 256, default_n_lists(n)})
-    results = {}
-    for n_lists in axis:
-        # ONE build per n_lists — the index is nprobe-independent
-        # (round-14 self-review #6)
-        root = tempfile.mkdtemp(prefix="ivfgeo_idx_")
-        t0 = time.perf_counter()
-        build_ivf_index(
-            emb, root, table="geo", n_lists=n_lists, sample_size=None
-        )
-        build_wall = round(time.perf_counter() - t0, 2)
-        for nprobe in sorted({4, max(4, n_lists // 16),
-                              max(4, n_lists // 8)}):
-            t0 = time.perf_counter()
-            got = defaultdict(set)
-            for r in ivf_index_topk(
-                spark, root, probes, table="geo", k=10, nprobe=nprobe
-            ).collect():
-                got[r.query_id].add(r.neighbor_id)
-            search_wall = round(time.perf_counter() - t0, 2)
-            recalls = [
-                len(gt[q] & got[q]) / max(len(gt[q]), 1) for q in gt
-            ]
-            row = {
-                "n_lists": n_lists,
-                "nprobe": nprobe,
-                "probed_fraction": round(nprobe / n_lists, 4),
-                "build_wall_sec": build_wall,
-                "search_wall_sec": search_wall,
-                "dense_recall_at_10_mean": round(
-                    sum(recalls) / len(recalls), 3
-                ),
-                "dense_recall_at_10_min": round(min(recalls), 3),
-            }
-            results[f"L{n_lists}_p{nprobe}"] = row
-            print(json.dumps(row))
-        shutil.rmtree(root, ignore_errors=True)
-
-    out_path = os.environ.get(
-        "SPARK_GRAFT_IVFGEO_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "ivf_geometry_probe_r14.json"),
-    )
-    with open(out_path, "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "n_vectors": n,
-                "replication": k,
-                "exact_gt_wall_sec": exact_wall,
-                "default_n_lists": default_n_lists(n),
-                "geometries": results,
-            },
-            fh,
-            indent=1,
-        )
-    print(f"wrote {out_path}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main_embpairs(k: int) -> None:
-    """Related-pair mining probe (VERDICT r04 item 7 / SCALE.md's open
-    edge): at k× isometric embedding density, measure the IVF-routed pair
-    miner's recall against exact blocked-numpy ground truth in the
-    cos ≥ 0.5 regime where depth-tuned sign-LSH measured 0.198."""
-    import numpy as np
-
-    from novi_pdq_etl_project_prod_spark.operators.similarity import (
-        embedding_related_pairs_ivf,
-    )
-
-    spark = get_spark(app_name="scale_probe_embpairs")
-    out_dir = tempfile.mkdtemp(prefix=f"embpx{k}_")
-    replicate_embeddings_isometric(spark, out_dir, k)
-    emb = spark.read.parquet(f"{out_dir}/embeddings.parquet")
-
-    t0 = time.perf_counter()
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = np.array([r.vec_id for r in rows], dtype="int64")
-    m = np.array([list(r.embedding) for r in rows], dtype="float64")
-    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    n = len(m)
-    exact = set()
-    B = 4096
-    for bi in range(0, n, B):
-        for bj in range(bi, n, B):
-            s = m[bi:bi + B] @ m[bj:bj + B].T
-            ii, jj = np.nonzero(s >= 0.5)
-            for i, j in zip(ii + bi, jj + bj):
-                if i < j:
-                    a, b = int(ids[i]), int(ids[j])
-                    exact.add((min(a, b), max(a, b)))
-    print(
-        f"exact ground truth: {len(exact)} pairs at cos>=0.5 over {n} "
-        f"vectors ({time.perf_counter()-t0:.0f}s blocked-numpy)"
-    )
-
-    # the last config is the proven ≥0.5-recall setting at 100× density
-    # (keep occupancy safely under the hot-list cap: at nprobe=8 the cap
-    # quarantines the very lists holding the pairs — measured 0.42–0.49
-    # vs 0.545 here)
-    for kw in (
-        dict(nprobe=2),
-        dict(nprobe=4),
-        dict(nprobe=6, target_list_occupancy=128),
-    ):
-        t0 = time.perf_counter()
-        got = {
-            (r.id_a, r.id_b)
-            for r in embedding_related_pairs_ivf(
-                emb, threshold=0.5, **kw
-            ).collect()
-        }
-        wall = time.perf_counter() - t0
-        fp = len(got - exact)
-        print(
-            f"  ivf pair miner {kw}: {len(got)} pairs in "
-            f"{wall:.0f}s, recall {len(exact & got)/len(exact):.3f}, "
-            f"false positives {fp}"
-        )
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main_skewjoin(k: int = 10) -> None:
-    """Skewed-JOIN demonstration (VERDICT r02 item 6), the join-side twin
-    of x2_salted_agg: a sentinel-skewed fact ⋈ dim at sf0.1×k, measured
-    three ways — plain sort-merge (AQE off: the straggler plan), AQE
-    skew-join splitting, and explicit salted_join (the no-AQE fallback).
-    The dim is made non-broadcastable (threshold -1) to model the
-    "small side too big to broadcast" regime salted_join exists for."""
-    from novi_pdq_etl_project_prod_spark.operators.skew import salted_join
-
-    spark = get_spark(app_name="scale_probe_skewjoin")
-    li = spark.read.parquet(f"{SRC}/lineitem.parquet")
-    reps = spark.range(k).withColumnRenamed("id", "rep")
-    # sentinel skew exactly like the reference's operator_no=0 collapse:
-    # half of all fact rows land on join key 0, rest spread over 100k keys
-    fact = (
-        li.crossJoin(F.broadcast(reps))
-        .select(
-            F.when(F.col("l_orderkey") % 2 == 0, F.lit(0))
-            .otherwise(F.pmod(F.hash("l_orderkey", "rep"), F.lit(100_000)))
-            .alias("k"),
-            F.col("l_quantity").alias("qty"),
-        )
-        # spread the replicated fact across the cores BEFORE timing: the
-        # raw crossJoin inherits lineitem's few input splits, which would
-        # serialize every plan's map side onto 2-4 tasks and mask the
-        # skew effect being measured
-        .repartition(64)
-        .persist()
-    )
-    n_fact = fact.count()
-    dim = spark.range(100_000).select(
-        F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("attr")
-    ).persist()
-    dim.count()
-    print(f"fact rows: {n_fact} ({k}x lineitem), hot-key share ~0.5; dim rows: 100000")
-
-    def timed(label, fn, **conf):
-        saved = {c: spark.conf.get(c) for c in conf}
-        for c, v in conf.items():
-            spark.conf.set(c, v)
-        try:
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-        finally:
-            for c, v in saved.items():
-                spark.conf.set(c, v)
-        print(f"  {label}: {dt:.2f}s")
-        return dt
-
-    no_bcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
-    plain = timed(
-        "plain sort-merge join (AQE off)  ",
-        lambda: fact.join(dim, "k"),
-        **no_bcast,
-        **{"spark.sql.adaptive.enabled": "false"},
-    )
-    aqe = timed(
-        "AQE skew-join splitting          ",
-        lambda: fact.join(dim, "k"),
-        **no_bcast,
-        **{
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            # fixture partitions are small; lower the skew thresholds so
-            # AQE recognizes the hot partition at this scale (cluster
-            # defaults 5x/256MB are tuned for real partition sizes)
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8m",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-        },
-    )
-    salted = timed(
-        "salted_join (32 salts, AQE off)  ",
-        lambda: salted_join(fact, dim, "k", n_salts=32),
-        **no_bcast,
-        **{"spark.sql.adaptive.enabled": "false"},
-    )
-    print(
-        f"  speedup vs plain: AQE {plain/max(aqe,0.01):.1f}x, "
-        f"salted {plain/max(salted,0.01):.1f}x"
-    )
-    fact.unpersist()
-    dim.unpersist()
-
-
-def main_docs(k: int) -> None:
-    """100×-documents probe for the similarity ops (m8, m19)."""
-    spark = get_spark(app_name="scale_probe_docs")
-    out_dir = tempfile.mkdtemp(prefix=f"docsx{k}_")
-    t0 = time.perf_counter()
-    replicate_docs_distinct(spark, out_dir, k)
-    n = spark.read.parquet(f"{out_dir}/documents.parquet").count()
-    print(f"replicated docs x{k} ({n} rows) in {time.perf_counter()-t0:.1f}s")
-
-    probe = [
-        "m8_minhash_near_dups",
-        "m19_decontaminate",
-        "m22_boilerplate_ngrams",
-        "m26_sequence_packing",
-    ]
-    results = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), (f"docs x{k}", out_dir)):
-        timings = {}
-        for name in probe:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-        results[sf_label] = timings
-        print(sf_label, json.dumps(timings))
-    for name in probe:
-        a, b = results["sf0.1"][name], results[f"docs x{k}"][name]
-        print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x docs)")
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main_r5(k: int) -> None:
-    """Round-5 operator probe at k× data, one replication style per data
-    family:
-
-    - key-shifted events (k× users): CDC apply, cumulative distinct,
-      session×incident overlap join — all expected ~linear (window /
-      hash-agg / bucket-join shapes);
-    - token-suffixed distinct documents: containment pairs, vocab
-      coverage, dup-adjusted tokens — replication-artifact-free (shifted
-      ids alone would make every replica an exact dup, blowing pair
-      counts ~k² and the dup-cluster sizes k×, which is data, not
-      algorithm);
-    - isometric embeddings: covariance moments (expected ~linear: Gram
-      partials per batch) and SemDeDup pairs (expected ~QUADRATIC here
-      BY DESIGN: the fixture's 10 labels are the clusters, so k× vectors
-      means k× larger cells and k² within-cell pairs — the measurement
-      that demonstrates why production SemDeDup must scale CLUSTER COUNT
-      with corpus size (k-means cells from train_ivf_centroids, cell
-      size held constant), not reuse a fixed label set).
-    """
-    spark = get_spark(app_name="scale_probe_r5")
-
-    ev_dir = tempfile.mkdtemp(prefix=f"r5ev{k}_")
-    replicate(spark, ev_dir, k)
-    docs_dir = tempfile.mkdtemp(prefix=f"r5doc{k}_")
-    replicate_docs_distinct(spark, docs_dir, k)
-    emb_dir = tempfile.mkdtemp(prefix=f"r5emb{k}_")
-    replicate_embeddings_isometric(spark, emb_dir, k)
-
-    groups = [
-        ("events", ev_dir, ["c1_cdc_apply", "w10_cumulative_distinct",
-                            "x16_session_incident_overlap"]),
-        ("docs", docs_dir, ["m39_containment_pairs", "m40_vocab_coverage",
-                            "m41_dup_adjusted_tokens"]),
-        ("emb", emb_dir, ["d15_embedding_covariance", "m38_semdedup_pairs"]),
-    ]
-    for label, scaled_dir, probe in groups:
-        results = {}
-        for sf_label, sf_dir in (("sf0.1", SRC), (f"{label} x{k}", scaled_dir)):
-            timings = {}
-            for name in probe:
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                timings[name] = round(time.perf_counter() - t0, 2)
-            results[sf_label] = timings
-            print(sf_label, json.dumps(timings))
-        for name in probe:
-            a, b = results["sf0.1"][name], results[f"{label} x{k}"][name]
-            print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x)")
-
-    # SemDeDup with bounded cells at k×: the fixture's 10 labels give k×
-    # larger cells (pair mass k² — measured above); capping cells at the
-    # sf0.1 cell size (hash sub-split) restores ~linear pair mass, the
-    # same effect as production's k-means cells with count ∝ corpus.
-    from novi_pdq_etl_project_prod_spark.operators.similarity import (
-        cluster_scoped_dup_pairs,
-    )
-
-    emb_k = spark.read.parquet(f"{emb_dir}/embeddings.parquet")
-    t0 = time.perf_counter()
-    capped = cluster_scoped_dup_pairs(emb_k, max_cluster_size=500)
-    capped.write.format("noop").mode("overwrite").save()
-    print(
-        f"  m38 with max_cluster_size=500 at x{k}: "
-        f"{time.perf_counter()-t0:.1f}s"
-    )
-    for d in (ev_dir, docs_dir, emb_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def main_r5c(k: int) -> None:
-    """Fourth-wave probe at k× data, same replication styles as --r5:
-
-    - key-shifted facts: c3 incremental join view (expected ~linear —
-      three equi-joins, delta-sized build sides);
-    - token-suffixed distinct documents: m43 components (pair mass is
-      the jaccard miner's, label propagation adds O(diameter) narrow
-      joins), m44 PPS sample (row-local filter), m45 compression
-      (row-local Python CPU, expected data-linear);
-    - isometric embeddings: m46 PCA (one Gram pass + row-local
-      projection, expected ~linear; the driver-side eigh is dim-bounded
-      and invariant to corpus size).
-    """
-    spark = get_spark(app_name="scale_probe_r5c")
-
-    fact_dir = tempfile.mkdtemp(prefix=f"r5cfact{k}_")
-    replicate(spark, fact_dir, k)
-    docs_dir = tempfile.mkdtemp(prefix=f"r5cdoc{k}_")
-    replicate_docs_distinct(spark, docs_dir, k)
-    emb_dir = tempfile.mkdtemp(prefix=f"r5cemb{k}_")
-    replicate_embeddings_isometric(spark, emb_dir, k)
-
-    groups = [
-        ("facts", fact_dir, ["c3_incremental_join", "d17_poisson_bootstrap",
-                             "j6_scd2_lookup", "w11_time_weighted_avg",
-                             "x21_asof_nearest"]),
-        ("docs", docs_dir, ["m43_pair_components", "m44_pps_sample",
-                            "m45_compression_signal"]),
-        ("emb", emb_dir, ["m46_pca_project"]),
-    ]
-    for label, scaled_dir, probe in groups:
-        results = {}
-        for sf_label, sf_dir in (("sf0.1", SRC), (f"{label} x{k}", scaled_dir)):
-            timings = {}
-            for name in probe:
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                timings[name] = round(time.perf_counter() - t0, 2)
-            results[sf_label] = timings
-            print(sf_label, json.dumps(timings))
-        for name in probe:
-            a, b = results["sf0.1"][name], results[f"{label} x{k}"][name]
-            print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x)")
-    for d in (fact_dir, docs_dir, emb_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def main_r6(k: int) -> None:
-    """Round-6 probe: m47 BPE token accounting at k× documents
-    (token-suffixed DISTINCT replication). Expected ~data-linear and
-    scan-bound: the counter is one row-local JVM expression — no
-    shuffle, no Python — so wall growth tracks decompressed text bytes
-    and nothing else."""
-    spark = get_spark(app_name="scale_probe_r6")
-    docs_dir = tempfile.mkdtemp(prefix=f"r6doc{k}_")
-    replicate_docs_distinct(spark, docs_dir, k)
-    probe = ["m47_bpe_token_count", "m42_curation_v2",
-             "m48_bpe_packing", "m50_budgeted_mixture",
-             "m51_shard_manifest", "m52_contamination_report"]
-    results = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), (f"docs x{k}", scaled_dir := docs_dir)):
-        timings = {}
-        for name in probe:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-            try:
-                from novi_pdq_etl_project_prod_spark import cache
-                cache.clear_session_state(spark)
-            except Exception:
-                pass
-        results[sf_label] = timings
-        print(sf_label, json.dumps(timings))
-    for name in probe:
-        a, b = results["sf0.1"][name], results[f"docs x{k}"][name]
-        print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x)")
-    shutil.rmtree(docs_dir, ignore_errors=True)
-
-
-def main_r6b(k: int) -> None:
-    """Round-6b probe at k× facts (key-shifted orders/lineitem, dims
-    fixed). Expected shapes: d18 linear in orders (then a fixed-size
-    fold per nation); d19 linear (two percentile sorts); d20/d21/d22
-    linear in the distinct pass with a constant-size sketch tail — rows
-    grow k× while part cardinality is fixed, exactly the
-    many-rows-few-distincts regime a sketch exists for; dq10 linear
-    (count-distinct hash-aggs); m53 superlinear in EDGES only if basket
-    co-occurrence density grows — with key-shifted orders the basket
-    size distribution is unchanged, so pairs grow k× and the wedge join
-    stays arboricity-bounded."""
-    spark = get_spark(app_name="scale_probe_r6b")
-    fact_dir = tempfile.mkdtemp(prefix=f"r6bfact{k}_")
-    replicate(spark, fact_dir, k)
-    probe = ["d18_ema", "d19_mad_outliers", "d20_kmv_distinct",
-             "d21_kmv_merge", "d22_kmv_set_overlap", "dq10_fd_violations",
-             "m53_copurchase_triangles", "d23_sample_quantiles",
-             "d24_weighted_median", "d25_gini_spend", "j7_bloom_prune"]
-    results = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), (f"facts x{k}", fact_dir)):
-        timings = {}
-        for name in probe:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-            try:
-                from novi_pdq_etl_project_prod_spark import cache
-                cache.release()
-            except Exception:
-                pass
-        results[sf_label] = timings
-        print(sf_label, json.dumps(timings))
-    for name in probe:
-        a, b = results["sf0.1"][name], results[f"facts x{k}"][name]
-        print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x)")
-    shutil.rmtree(fact_dir, ignore_errors=True)
 
 
 def _bounded_run(spark, fn, budget_s: float) -> dict:
@@ -829,14 +184,15 @@ def replicate_full(spark, out_dir: str, k: int) -> None:
     no cross-replica dup artifact), embeddings isometric (per-replica
     neighbor structure preserved, cross-replica scrambled)."""
     replicate(spark, out_dir, k)
-    replicate_docs_distinct(spark, out_dir, k, copy_rest=False)
-    replicate_embeddings_isometric(spark, out_dir, k, copy_rest=False)
+    replicate_docs_distinct(spark, out_dir, k)
+    replicate_embeddings_isometric(spark, out_dir, k)
 
 
 def main_full(k: int) -> None:
     """Full-catalog k× sweep (VERDICT r07 item 3): run EVERY catalog
     query at sf0.1 and at k×, record growth ratios to
-    tools/scale_sweep_r08.json, and print the outlier triage. Budgets:
+    ``$SPARK_GRAFT_SWEEP_OUT`` (default tools/scale_sweep_r09.json), and
+    print the outlier triage. Budgets:
     90 s at base, 420 s at k× — a query blowing either bound is itself a
     finding (recorded, not hung). Caches are cleared between queries so
     timings don't inherit leaked persists (bench methodology v2)."""
@@ -898,868 +254,11 @@ def main_full(k: int) -> None:
     shutil.rmtree(out_dir, ignore_errors=True)
 
 
-def main_skewagg(k: int = 10) -> None:
-    """Skewed-AGG demonstration at k× (VERDICT r07 item 7), the agg twin
-    of --skewjoin: manufacture the reference's 0-sentinel hot key (half
-    of all rows collapse onto operator_no=0, SURVEY §7.3) at sf0.1×k and
-    measure plain groupBy vs two-stage salted aggregation vs AQE."""
-    from novi_pdq_etl_project_prod_spark.operators.skew import salted_agg
-
-    spark = get_spark(app_name="scale_probe_skewagg")
-    li = spark.read.parquet(f"{SRC}/lineitem.parquet")
-    reps = spark.range(k).withColumnRenamed("id", "rep")
-    fact = (
-        li.crossJoin(F.broadcast(reps))
-        .select(
-            F.when(F.col("l_orderkey") % 2 == 0, F.lit(0))
-            .otherwise(F.pmod(F.hash("l_orderkey", "rep"), F.lit(100_000)))
-            .alias("k"),
-            F.col("l_quantity").alias("qty"),
-            F.col("l_extendedprice").alias("price"),
-        )
-        .repartition(64)
-        .persist()
-    )
-    n = fact.count()
-    print(f"fact rows: {n} ({k}x lineitem), hot-key share ~0.5")
-
-    def timed(label, fn, **conf):
-        saved = {c: spark.conf.get(c) for c in conf}
-        for c, v in conf.items():
-            spark.conf.set(c, v)
-        try:
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-        finally:
-            for c, v in saved.items():
-                spark.conf.set(c, v)
-        print(f"  {label}: {dt:.2f}s")
-        return dt
-
-    aggs = lambda df: df.groupBy("k").agg(  # noqa: E731
-        F.sum("qty").alias("sum_qty"),
-        F.count(F.lit(1)).alias("n"),
-        F.avg("price").alias("avg_price"),
-    )
-    plain = timed(
-        "plain groupBy (AQE off)        ",
-        lambda: aggs(fact),
-        **{"spark.sql.adaptive.enabled": "false"},
-    )
-    aqe = timed(
-        "plain groupBy (AQE on)         ",
-        lambda: aggs(fact),
-        **{"spark.sql.adaptive.enabled": "true"},
-    )
-    salted = timed(
-        "salted_agg (32 salts, AQE off) ",
-        lambda: salted_agg(
-            fact,
-            ["k"],
-            {"sum_qty": ("sum", F.col("qty")), "n": ("count", F.lit(1))},
-        ),
-        **{"spark.sql.adaptive.enabled": "false"},
-    )
-    print(
-        f"  vs plain: AQE {plain/max(aqe,0.01):.2f}x, "
-        f"salted {plain/max(salted,0.01):.2f}x "
-        "(map-side partial aggregation already absorbs sum/count skew; "
-        "salting matters for high-cardinality-state aggs — see SCALE.md)"
-    )
-    fact.unpersist()
-
-
-def main_r9(k_graph: int = 30, k_docs: int = 100) -> None:
-    """100×-regime probes for the round-8 iterative ops (VERDICT r08
-    item 3).
-
-    m63 PageRank on a DENSER graph: lineitem replicated ``k_graph``×
-    with shifted (orderkey, suppkey) — each replica is its own
-    component, so nodes AND edges grow ~k× while rounds stay 10; at
-    sf0.1 the per-round fixed overhead (job launch + analysis)
-    dominates and hides the edge-mass term this probe exposes.
-    Per-round walls come from pagerank_integer's on_round hook; the
-    node-bounded-state claim is checked directly (checkpointed rows ==
-    node count, never edge count).
-
-    m64 BPE training on a ``k_docs``× corpus with token-suffixed
-    DISTINCT replication (the adversarial regime for the distinct-word
-    grain: the vocabulary grows ~k× with the corpus, so per-round pair
-    statistics can't amortize over repeated words the way real Zipf
-    corpora allow).
-    """
-    from novi_pdq_etl_project_prod_spark import cache
-    from novi_pdq_etl_project_prod_spark.operators.graphs import (
-        pagerank_integer,
-    )
-
-    spark = get_spark(app_name="scale_probe_r9")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # ---- m63 dense graph ----
-    li = spark.read.parquet(f"{SRC}/lineitem.parquet")
-    max_ok = li.agg(F.max("l_orderkey")).collect()[0][0] + 1
-    reps = spark.range(k_graph).withColumnRenamed("id", "rep")
-    li_rep = (
-        li.select("l_orderkey", "l_suppkey")
-        .crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("l_orderkey") + F.col("rep") * max_ok).alias("l_orderkey"),
-            (F.col("l_suppkey") + F.col("rep") * 100_000).alias("l_suppkey"),
-        )
-    )
-
-    def edges_of(frame):
-        baskets = frame.groupBy("l_orderkey").agg(
-            F.array_sort(F.collect_set("l_suppkey")).alias("ss")
-        )
-        pair = baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ss",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ss"), i + 2, F.size("ss")),
-                            lambda y: F.struct(x.alias("u"), y.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("pr")
-        )
-        return (
-            pair.select("pr.u", "pr.v")
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") >= 2)
-            .select("u", "v")
-        )
-
-    for label, frame in (("sf0.1", li.select("l_orderkey", "l_suppkey")),
-                         (f"x{k_graph}", li_rep)):
-        t0 = time.perf_counter()
-        e = edges_of(frame)
-        n_edges = e.count()
-        t_build = time.perf_counter() - t0
-        rounds: list[float] = []
-        t0 = time.perf_counter()
-        ranks = pagerank_integer(
-            e, iterations=10, on_round=lambda i, s: rounds.append(round(s, 2))
-        )
-        n_nodes = ranks.count()
-        t_pr = time.perf_counter() - t0
-        cache.clear_session_state(spark)
-        print(
-            f"m63 {label}: edges={n_edges} nodes={n_nodes} "
-            f"build={t_build:.1f}s pagerank={t_pr:.1f}s rounds={rounds} "
-            f"(state rows == node count: checkpoint is node-bounded)"
-        )
-
-    # ---- m64 at k_docs× ----
-    out_dir = tempfile.mkdtemp(prefix=f"r9docsx{k_docs}_")
-    try:
-        t0 = time.perf_counter()
-        replicate_docs_distinct(spark, out_dir, k_docs, copy_rest=False)
-        print(f"replicated docs x{k_docs} in {time.perf_counter()-t0:.1f}s")
-        for label, d in (("sf0.1", SRC), (f"x{k_docs}", out_dir)):
-            t0 = time.perf_counter()
-            QUERIES["m64_bpe_train"](spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            cache.clear_session_state(spark)
-            print(f"m64 {label}: {time.perf_counter()-t0:.1f}s")
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main_r10(k: int = 100) -> None:
-    """Round-10 probes (VERDICT r09 items 3 + 5).
-
-    (a) Incremental near-dup with a FIXED increment against a standing
-        corpus at 1×/10×/k×: the batch operator's wall (must track the
-        standing-side signature scan — linear — never old×old pair
-        mass) and the STREAMING SINK's per-batch committed bytes (must
-        be ~flat: the append-segment commit writes only the batch).
-        The increment is the original 5k docs re-keyed with UNCHANGED
-        text, so its true cross pairs hit only replica 0's originals —
-        a constant pair set while the standing corpus grows 100×.
-    (b) m65 calibration at k× docs (artifact-free suffixed replication):
-        the truth join is pair-scoped, so its wall must track the
-        REPORTED-PAIR count (which grows ~k× — each replica preserves
-        the original internal near-dup structure), not corpus².
-    """
-    from novi_pdq_etl_project_prod_spark import cache
-    from novi_pdq_etl_project_prod_spark.operators.dedup import (
-        incremental_minhash_pairs,
-        minhash_calibration_report,
-        minhash_signatures_md5,
-    )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest,
-        table_path,
-    )
-    from novi_pdq_etl_project_prod_spark.streaming.events import (
-        stream_incremental_near_dups,
-    )
-
-    def _dir_bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dn, fs in os.walk(d)
-            for f in fs
-        )
-
-    spark = get_spark(app_name="scale_probe_r10")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    docs_src = spark.read.parquet(f"{SRC}/documents.parquet")
-    # fixed increment: original text, fresh id range (far above any
-    # replica's shifted ids)
-    increment = docs_src.withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000_000)
-    )
-    inc_dir = tempfile.mkdtemp(prefix="r10inc_")
-    increment.coalesce(1).write.mode("overwrite").parquet(inc_dir)
-
-    scales: list[tuple[str, int]] = [("x1", 1), ("x10", 10), (f"x{k}", k)]
-    corpora: dict[str, str] = {}
-    try:
-        for label, kk in scales:
-            if kk == 1:
-                corpora[label] = SRC
-                continue
-            d = tempfile.mkdtemp(prefix=f"r10docs{label}_")
-            t0 = time.perf_counter()
-            replicate_docs_distinct(spark, d, kk, copy_rest=False)
-            print(f"replicated docs {label} in {time.perf_counter()-t0:.1f}s")
-            corpora[label] = d
-
-        # warmup: codegen/class-loading for the minhash pipeline, so the
-        # x1 row isn't inflated by JIT cold start
-        incremental_minhash_pairs(
-            increment.limit(200), increment.limit(200)
-        ).write.format("noop").mode("overwrite").save()
-        cache.clear_session_state(spark)
-
-        # ---- (a1) batch operator: fixed increment, growing standing ----
-        for label, _kk in scales:
-            standing = spark.read.parquet(
-                f"{corpora[label]}/documents.parquet"
-            )
-            n_standing = standing.count()
-            t0 = time.perf_counter()
-            pairs = incremental_minhash_pairs(increment, standing)
-            n_pairs = pairs.count()
-            wall = time.perf_counter() - t0
-            cache.clear_session_state(spark)
-            print(
-                f"m66 batch {label}: standing={n_standing} "
-                f"pairs={n_pairs} wall={wall:.1f}s"
-            )
-
-        # ---- (a2) streaming sink: per-batch committed bytes ----
-        for label, _kk in scales:
-            root = tempfile.mkdtemp(prefix=f"r10wh{label}_")
-            chk = tempfile.mkdtemp(prefix=f"r10chk{label}_")
-            try:
-                standing = spark.read.parquet(
-                    f"{corpora[label]}/documents.parquet"
-                )
-                sigs0 = minhash_signatures_md5(standing, "doc_id", "text")
-                commit_tables(
-                    {"minhash_signatures": sigs0}, root, "curated"
-                )
-                standing_bytes = _dir_bytes(root)
-                stream = spark.readStream.schema(
-                    "doc_id bigint, text string"
-                ).parquet(inc_dir)
-                t0 = time.perf_counter()
-                stream_incremental_near_dups(
-                    stream, root, "curated", checkpoint_dir=chk,
-                    threshold=0.5,
-                )
-                wall = time.perf_counter() - t0
-                man = read_manifest(root, "curated")
-                new_bytes = 0
-                for tbl in ("minhash_signatures", "near_dup_pairs"):
-                    entry = man.get(tbl)
-                    segs = [entry] if isinstance(entry, str) else entry or []
-                    if tbl == "minhash_signatures":
-                        segs = segs[1:]  # skip the pre-seeded segment
-                    for seg in segs:
-                        new_bytes += _dir_bytes(
-                            os.path.join(table_path(root, "curated", tbl), seg)
-                        )
-                cache.clear_session_state(spark)
-                print(
-                    f"m66 sink {label}: standing_bytes={standing_bytes>>20}MiB"
-                    f" batch_commit_bytes={new_bytes>>10}KiB wall={wall:.1f}s"
-                )
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-                shutil.rmtree(chk, ignore_errors=True)
-
-        # ---- (a3) streaming EXACT-dedup sink: same protocol ----
-        from novi_pdq_etl_project_prod_spark.streaming.events import (
-            stream_incremental_exact_dups,
-        )
-
-        for label, _kk in scales:
-            root = tempfile.mkdtemp(prefix=f"r10xwh{label}_")
-            chk = tempfile.mkdtemp(prefix=f"r10xchk{label}_")
-            try:
-                standing = spark.read.parquet(
-                    f"{corpora[label]}/documents.parquet"
-                )
-                seed = standing.select(
-                    F.md5("text").alias("h"),
-                    F.col("doc_id").alias("canonical_id"),
-                ).groupBy("h").agg(
-                    F.min("canonical_id").alias("canonical_id")
-                )
-                commit_tables({"content_hashes": seed}, root, "curated")
-                standing_bytes = _dir_bytes(root)
-                stream = spark.readStream.schema(
-                    "doc_id bigint, text string"
-                ).parquet(inc_dir)
-                t0 = time.perf_counter()
-                stream_incremental_exact_dups(
-                    stream, root, "curated", checkpoint_dir=chk
-                )
-                wall = time.perf_counter() - t0
-                man = read_manifest(root, "curated")
-                new_bytes = 0
-                for tbl in ("content_hashes", "exact_dups"):
-                    entry = man.get(tbl)
-                    segs = [entry] if isinstance(entry, str) else entry or []
-                    if tbl == "content_hashes":
-                        segs = segs[1:]  # skip the pre-seeded segment
-                    for seg in segs:
-                        new_bytes += _dir_bytes(
-                            os.path.join(table_path(root, "curated", tbl), seg)
-                        )
-                cache.clear_session_state(spark)
-                print(
-                    f"m69 sink {label}: standing_bytes={standing_bytes>>20}MiB"
-                    f" batch_commit_bytes={new_bytes>>10}KiB wall={wall:.1f}s"
-                )
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-                shutil.rmtree(chk, ignore_errors=True)
-
-        # ---- (b) m65 calibration at 1× and k× ----
-        for label in ("x1", f"x{k}"):
-            docs = spark.read.parquet(f"{corpora[label]}/documents.parquet")
-            t0 = time.perf_counter()
-            rep = minhash_calibration_report(docs, threshold=0.5)
-            n_pairs = rep.count()
-            wall = time.perf_counter() - t0
-            cache.clear_session_state(spark)
-            print(f"m65 {label}: reported_pairs={n_pairs} wall={wall:.1f}s")
-    finally:
-        shutil.rmtree(inc_dir, ignore_errors=True)
-        for label, d in corpora.items():
-            if d != SRC:
-                shutil.rmtree(d, ignore_errors=True)
-
-
-def main_r11(
-    k: int = 100,
-    n_segments: int = 1000,
-    parts: tuple = ("ingest", "segments"),
-) -> None:
-    """Round-11 probes (VERDICT r10 #1b + #2).
-
-    (a) COMPOSED ingest pipeline (plans.ingest.run_incremental_ingest):
-        one fixed increment (half exact re-fetches, half near-dup
-        variants — both standing scans exercised) against a standing
-        corpus at 1x/10x/kx. The composed per-trigger wall must track
-        the two standing-side scans (hash map-side pass + signature
-        band join — linear), NOT the sum of the three standalone sinks;
-        committed bytes must stay ~flat (append segments, O(batch)).
-
-    (b) SEGMENT READ AMPLIFICATION: a table accumulating 10/100/N tiny
-        append segments on top of a substantial base — scan wall and
-        manifest cost per segment count, then maybe_compact fires and
-        the scan is re-measured. The long-horizon cost the r10 probes
-        (one batch) never measured.
-    """
-    from novi_pdq_etl_project_prod_spark import cache
-    from novi_pdq_etl_project_prod_spark.operators.dedup import (
-        minhash_signatures_md5,
-    )
-    from novi_pdq_etl_project_prod_spark.plans.ingest import (
-        run_incremental_ingest,
-    )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        maybe_compact,
-        read_manifest,
-        read_manifest_tables,
-        segment_count,
-        table_path,
-        vacuum,
-    )
-
-    def _dir_bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dn, fs in os.walk(d)
-            for f in fs
-        )
-
-    spark = get_spark(app_name="scale_probe_r11")
-    spark.sparkContext.setLogLevel("ERROR")
-    results: dict = {"ingest": [], "segments": []}
-
-    docs_src = spark.read.parquet(f"{SRC}/documents.parquet")
-    # fixed increment: half exact re-fetches (unchanged text), half
-    # near-dup variants (one appended token -> new hash, high Jaccard)
-    increment = docs_src.select(
-        (F.col("doc_id") + F.lit(1_000_000_000)).alias("doc_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.col("text"))
-        .otherwise(F.concat(F.col("text"), F.lit(" vA")))
-        .alias("text"),
-    )
-    inc_dir = tempfile.mkdtemp(prefix="r11inc_")
-    increment.coalesce(1).write.mode("overwrite").parquet(inc_dir)
-    # spans-mode increment: thirds — exact re-fetch, near-dup variant,
-    # and a span-PLANTED accepted doc (12 tokens lifted verbatim from
-    # its standing twin + 60 doc-unique filler tokens: MinHash Jaccard
-    # ~0.15 so the funnel accepts it, while the 12-token run repeats
-    # against the standing gram set and must surface as a span). The
-    # plain-ingest increment would leave the span stage an empty
-    # accepted set — measuring nothing.
-    filler = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(60)),
-            lambda i: F.concat(
-                F.lit("u"), F.col("doc_id").cast("string"), F.lit("_"),
-                i.cast("string"),
-            ),
-        ),
-    )
-    lifted = F.concat_ws(
-        " ", F.slice(F.split(F.trim("text"), r"\s+"), 1, 12)
-    )
-    increment_spans = docs_src.select(
-        (F.col("doc_id") + F.lit(1_000_000_000)).alias("doc_id"),
-        F.when(F.col("doc_id") % 3 == 0, F.col("text"))
-        .when(F.col("doc_id") % 3 == 1, F.concat(F.col("text"), F.lit(" vA")))
-        .otherwise(F.concat(filler, F.lit(" "), lifted))
-        .alias("text"),
-    )
-    inc_spans_dir = tempfile.mkdtemp(prefix="r11incsp_")
-    increment_spans.coalesce(1).write.mode("overwrite").parquet(inc_spans_dir)
-    rules = {"min_len": "length(trim(text)) >= 10"}
-
-    scales = (
-        [("x1", 1), ("x10", 10), (f"x{k}", k)]
-        if ("ingest" in parts or "ingest_spans" in parts)
-        else []
-    )
-    corpora: dict[str, str] = {}
-    try:
-        for label, kk in scales:
-            if kk == 1:
-                corpora[label] = SRC
-                continue
-            d = tempfile.mkdtemp(prefix=f"r11docs{label}_")
-            replicate_docs_distinct(spark, d, kk, copy_rest=False)
-            corpora[label] = d
-
-        # ---- (a) composed ingest: fixed increment, growing standing.
-        # "ingest" = the three-stage funnel; "ingest_spans" = the same
-        # protocol with span_k set (the 4-stage funnel: the standing
-        # gram table is seeded too, and the per-trigger wall now
-        # includes the gram existence probe).
-        modes = [
-            (mk, sk)
-            for mk, sk in (("ingest", None), ("ingest_spans", 10))
-            if mk in parts
-        ]
-        results.setdefault("ingest_spans", [])
-        for mode_key, span_k in modes:
-          for label, _kk in scales:
-            root = tempfile.mkdtemp(prefix=f"r11wh{label}_")
-            chk = tempfile.mkdtemp(prefix=f"r11chk{label}_")
-            try:
-                standing = spark.read.parquet(
-                    f"{corpora[label]}/documents.parquet"
-                )
-                n_standing = standing.count()
-                seed_h = (
-                    standing.select(
-                        F.md5("text").alias("h"),
-                        F.col("doc_id").alias("canonical_id"),
-                    )
-                    .groupBy("h")
-                    .agg(F.min("canonical_id").alias("canonical_id"))
-                )
-                seed_s = minhash_signatures_md5(standing, "doc_id", "text")
-                seed = {
-                    # schema-gate parity: the stream carries
-                    # (doc_id, text), so the seeded corpus must too
-                    "corpus": standing.select("doc_id", "text"),
-                    "content_hashes": seed_h,
-                    "minhash_signatures": seed_s,
-                }
-                if span_k is not None:
-                    from novi_pdq_etl_project_prod_spark.operators.dedup import (
-                        gram_set,
-                    )
-
-                    seed["standing_grams"] = gram_set(standing, k=span_k)
-                commit_tables(seed, root, "curated")
-                seeded_segs = read_manifest(root, "curated")
-                stream = spark.readStream.schema(
-                    "doc_id bigint, text string"
-                ).parquet(inc_dir if span_k is None else inc_spans_dir)
-                t0 = time.perf_counter()
-                run_incremental_ingest(
-                    stream, root, "curated", chk, rules, threshold=0.5,
-                    span_k=span_k,
-                )
-                wall = time.perf_counter() - t0
-                man = read_manifest(root, "curated")
-                new_bytes = 0
-                for tbl, entry in man.items():
-                    segs = [entry] if isinstance(entry, str) else list(entry)
-                    pre = seeded_segs.get(tbl)
-                    pre_set = (
-                        {pre} if isinstance(pre, str) else set(pre or [])
-                    )
-                    for seg in segs:
-                        if seg in pre_set:
-                            continue
-                        new_bytes += _dir_bytes(
-                            os.path.join(table_path(root, "curated", tbl), seg)
-                        )
-                row = {
-                    "label": label,
-                    "standing_docs": n_standing,
-                    "wall_s": round(wall, 1),
-                    "commit_bytes": new_bytes,
-                }
-                if span_k is not None:
-                    # prove the stage did work: planted spans must land
-                    spans_tbl = read_manifest_tables(
-                        spark, root, "curated"
-                    ).get("repeated_spans")
-                    row["span_rows"] = (
-                        0 if spans_tbl is None else spans_tbl.count()
-                    )
-                results[mode_key].append(row)
-                cache.clear_session_state(spark)
-                print(f"r11 {mode_key} {row}")
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-                shutil.rmtree(chk, ignore_errors=True)
-
-        # ---- (b) segment read amplification ----
-        if "segments" not in parts:
-            raise SystemExit(_finish(results))
-        root = tempfile.mkdtemp(prefix="r11seg_")
-        try:
-            base = spark.range(0, 2_000_000).withColumn(
-                "v", (F.col("id") * 31) % 997
-            )
-            commit_tables({"t": base.repartition(8)}, root, "curated")
-            checkpoints = sorted({10, 100, int(n_segments)})
-            done = 1  # the base snapshot counts as segment 0 post-upgrade
-            for target in checkpoints:
-                t_append0 = time.perf_counter()
-                while done < target:
-                    commit_tables(
-                        {"t": spark.range(done, done + 1).withColumn(
-                            "v", F.lit(7).cast("long")
-                        )},
-                        root,
-                        "curated",
-                        append_tables=("t",),
-                    )
-                    done += 1
-                append_wall = time.perf_counter() - t_append0
-                nseg = segment_count(root, "curated", "t")
-                t0 = time.perf_counter()
-                n = read_manifest_tables(spark, root, "curated")["t"].count()
-                scan_wall = time.perf_counter() - t0
-                row = {
-                    "segments": nseg,
-                    "rows": n,
-                    "scan_wall_s": round(scan_wall, 2),
-                    "append_wall_s": round(append_wall, 1),
-                }
-                results["segments"].append(row)
-                print(f"r11 segments {row}")
-            # compaction closes the amplification; vacuum collects the
-            # old segment dirs once unreferenced
-            t0 = time.perf_counter()
-            d = maybe_compact(
-                spark, root, "curated", "t", max_segments=8
-            )
-            compact_wall = time.perf_counter() - t0
-            assert d["fired"] and d["segment_count_after"] == 1
-            t0 = time.perf_counter()
-            n = read_manifest_tables(spark, root, "curated")["t"].count()
-            scan_after = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            removed = vacuum(root, "curated", retain=0, grace_seconds=0.0)
-            vacuum_wall = time.perf_counter() - t0
-            row = {
-                "segments": 1,
-                "rows": n,
-                "scan_wall_s": round(scan_after, 2),
-                "compact_wall_s": round(compact_wall, 1),
-                "vacuum_wall_s": round(vacuum_wall, 1),
-                "vacuumed_dirs": sum(removed.values()),
-            }
-            results["segments"].append(row)
-            print(f"r11 segments post-compact {row}")
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    finally:
-        shutil.rmtree(inc_dir, ignore_errors=True)
-        shutil.rmtree(inc_spans_dir, ignore_errors=True)
-        for _label, d in corpora.items():
-            if d != SRC:
-                shutil.rmtree(d, ignore_errors=True)
-    _finish(results)
-
-
-def _finish(results: dict) -> int:
-    out = os.environ.get(
-        "SPARK_GRAFT_R11_OUT",
-        os.path.join(os.path.dirname(__file__), "scale_probe_r11.json"),
-    )
-    merged = results
-    if os.path.exists(out):
-        try:
-            with open(out, encoding="utf-8") as fh:
-                prior = json.load(fh)
-            # start from EVERYTHING already recorded (keys this run
-            # didn't touch must survive the merge), then extend the
-            # sections this run produced
-            merged = dict(prior)
-            for key, vals in results.items():
-                if vals:
-                    merged[key] = (prior.get(key) or []) + vals
-                else:
-                    merged.setdefault(key, [])
-        except Exception:
-            pass
-    with open(out, "w", encoding="utf-8") as fh:
-        json.dump(merged, fh, indent=1)
-    print(f"wrote {out}")
-    return 0
-
-
-def main_r11_spans(k: int = 100) -> None:
-    """Round-11 span-sink probe: the third incremental-dedup sink
-    measured on the same axes as its exact/near-dup siblings — ONE
-    fixed increment against a standing GRAM SET at 1x/10x/kx: per-batch
-    wall must track the single standing column scan (linear in gram
-    count), committed bytes must be O(batch's new grams + spans)."""
-    from novi_pdq_etl_project_prod_spark import cache
-    from novi_pdq_etl_project_prod_spark.operators.dedup import gram_set
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest,
-        table_path,
-    )
-    from novi_pdq_etl_project_prod_spark.streaming.events import (
-        stream_incremental_repeated_spans,
-    )
-
-    def _dir_bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dn, fs in os.walk(d)
-            for f in fs
-        )
-
-    spark = get_spark(app_name="scale_probe_r11_spans")
-    spark.sparkContext.setLogLevel("ERROR")
-    results: dict = {"spans_sink": []}
-
-    docs_src = spark.read.parquet(f"{SRC}/documents.parquet")
-    # fixed increment: half re-fetches (their spans repeat vs replica-0
-    # grams), half token-suffixed (no grams shared with anything)
-    increment = docs_src.select(
-        (F.col("doc_id") + F.lit(1_000_000_000)).alias("doc_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.col("text")).otherwise(
-            F.expr(r"regexp_replace(text, '(\\S+)', '$1zq')")
-        ).alias("text"),
-    )
-    inc_dir = tempfile.mkdtemp(prefix="r11spinc_")
-    increment.coalesce(1).write.mode("overwrite").parquet(inc_dir)
-
-    scales = [("x1", 1), ("x10", 10), (f"x{k}", k)]
-    corpora: dict[str, str] = {}
-    try:
-        for label, kk in scales:
-            if kk == 1:
-                corpora[label] = SRC
-                continue
-            d = tempfile.mkdtemp(prefix=f"r11spdocs{label}_")
-            replicate_docs_distinct(spark, d, kk, copy_rest=False)
-            corpora[label] = d
-        for label, _kk in scales:
-            root = tempfile.mkdtemp(prefix=f"r11spwh{label}_")
-            chk = tempfile.mkdtemp(prefix=f"r11spchk{label}_")
-            try:
-                standing = spark.read.parquet(
-                    f"{corpora[label]}/documents.parquet"
-                )
-                seed = gram_set(standing, k=10)
-                commit_tables({"standing_grams": seed}, root, "curated")
-                n_grams = _dir_bytes(root)
-                stream = spark.readStream.schema(
-                    "doc_id bigint, text string"
-                ).parquet(inc_dir)
-                t0 = time.perf_counter()
-                stream_incremental_repeated_spans(
-                    stream, root, "curated", chk, k=10
-                )
-                wall = time.perf_counter() - t0
-                man = read_manifest(root, "curated")
-                new_bytes = 0
-                for tbl in ("standing_grams", "repeated_spans"):
-                    entry = man.get(tbl)
-                    segs = [entry] if isinstance(entry, str) else entry or []
-                    if tbl == "standing_grams":
-                        segs = segs[1:]  # skip the seed segment
-                    for seg in segs:
-                        new_bytes += _dir_bytes(
-                            os.path.join(table_path(root, "curated", tbl), seg)
-                        )
-                row = {
-                    "label": label,
-                    "standing_gram_bytes": n_grams,
-                    "wall_s": round(wall, 1),
-                    "commit_bytes": new_bytes,
-                }
-                results["spans_sink"].append(row)
-                cache.clear_session_state(spark)
-                print(f"r11 spans sink {row}")
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-                shutil.rmtree(chk, ignore_errors=True)
-    finally:
-        shutil.rmtree(inc_dir, ignore_errors=True)
-        for _label, d in corpora.items():
-            if d != SRC:
-                shutil.rmtree(d, ignore_errors=True)
-    _finish(results)
-
-
 def main() -> None:
-    if "--r11-spans" in sys.argv:
-        idx = sys.argv.index("--r11-spans")
-        main_r11_spans(
-            int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 100
-        )
-        return
-    if "--r11-segments" in sys.argv:
-        idx = sys.argv.index("--r11-segments")
-        n = int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 1000
-        main_r11(n_segments=n, parts=("segments",))
-        return
-    if "--r11-ingest-spans" in sys.argv:
-        idx = sys.argv.index("--r11-ingest-spans")
-        main_r11(
-            int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 100,
-            parts=("ingest_spans",),
-        )
-        return
-    if "--r11-ingest" in sys.argv:
-        idx = sys.argv.index("--r11-ingest")
-        main_r11(
-            int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 100,
-            parts=("ingest",),
-        )
-        return
-    if "--r11" in sys.argv:
-        idx = sys.argv.index("--r11")
-        main_r11(int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 100)
-        return
-    if "--r10" in sys.argv:
-        idx = sys.argv.index("--r10")
-        main_r10(int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 100)
-        return
-    if "--r9" in sys.argv:
-        idx = sys.argv.index("--r9")
-        k = int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 30
-        main_r9(k_graph=k)
-        return
-    if "--full" in sys.argv:
-        idx = sys.argv.index("--full")
-        main_full(int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 10)
-        return
-    if "--skewagg" in sys.argv:
-        idx = sys.argv.index("--skewagg")
-        arg = sys.argv[idx + 1] if len(sys.argv) > idx + 1 else "10"
-        main_skewagg(int(arg))
-        return
-    if "--r6b" in sys.argv:
-        main_r6b(int(sys.argv[sys.argv.index("--r6b") + 1]))
-        return
-    if "--r6" in sys.argv:
-        main_r6(int(sys.argv[sys.argv.index("--r6") + 1]))
-        return
-    if "--r5c" in sys.argv:
-        main_r5c(int(sys.argv[sys.argv.index("--r5c") + 1]))
-        return
-    if "--r5" in sys.argv:
-        main_r5(int(sys.argv[sys.argv.index("--r5") + 1]))
-        return
-    if "--docs" in sys.argv:
-        main_docs(int(sys.argv[sys.argv.index("--docs") + 1]))
-        return
-    if "--emb" in sys.argv:
-        main_embeddings(int(sys.argv[sys.argv.index("--emb") + 1]))
-        return
-    if "--embpairs" in sys.argv:
-        main_embpairs(int(sys.argv[sys.argv.index("--embpairs") + 1]))
-        return
-    if "--hybrid" in sys.argv:
-        main_hybrid(int(sys.argv[sys.argv.index("--hybrid") + 1]))
-        return
-    if "--ivf-geometry" in sys.argv:
-        idx = sys.argv.index("--ivf-geometry")
-        main_ivf_geometry(
-            int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 100
-        )
-        return
-    if "--skewjoin" in sys.argv:
-        idx = sys.argv.index("--skewjoin")
-        arg = sys.argv[idx + 1] if len(sys.argv) > idx + 1 else "10"
-        main_skewjoin(int(arg))
-        return
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark(app_name="scale_probe")
-    out_dir = tempfile.mkdtemp(prefix=f"sfx{k}_")
-    t0 = time.perf_counter()
-    replicate(spark, out_dir, k)
-    print(f"replicated x{k} in {time.perf_counter()-t0:.1f}s -> {out_dir}")
-
-    results = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), (f"sf0.1x{k}", out_dir)):
-        timings = {}
-        for name in PROBE_QUERIES:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-        results[sf_label] = timings
-        print(sf_label, json.dumps(timings))
-
-    print("\nscaling factor per query (x{} data):".format(k))
-    for name in PROBE_QUERIES:
-        a, b = results["sf0.1"][name], results[f"sf0.1x{k}"][name]
-        print(f"  {name}: {a}s -> {b}s  ({b/max(a,0.01):.1f}x wall for {k}x rows)")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    if "--full" not in sys.argv:
+        sys.exit(__doc__)
+    idx = sys.argv.index("--full")
+    main_full(int(sys.argv[idx + 1]) if len(sys.argv) > idx + 1 else 10)
 
 
 if __name__ == "__main__":
