@@ -18,14 +18,24 @@ Differences from the reference, by design:
 - dim upsert ON CONFLICT → latest-wins dedup + snapshot overwrite (S9);
 - the transforms and DQ checks run from the same library operators the
   query catalog exposes, so the oracle harness covers their semantics.
+
+Where the counts come from: every ``PipelineResult`` row count is an
+observed metric (``sources.layers.observe_rows``) of the write that
+produced those rows — the staging month, each merged dim snapshot, each
+fact month — so no job re-counts what a write already saw. Only
+``rollup_mismatches`` is a ``count()``: it is not a write. Every
+re-read of a just-written table passes the schema the pipeline wrote
+(``read_month(..., schema=...)``): Spark then skips Parquet schema
+inference, which would otherwise cost one footer-reading job per read.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from novi_pdq_etl_project_prod_spark import cache
 from novi_pdq_etl_project_prod_spark.operators.modeling import (
@@ -50,9 +60,10 @@ from novi_pdq_etl_project_prod_spark.sources.json_raw import (
     tolerant_string_schema,
 )
 from novi_pdq_etl_project_prod_spark.sources.layers import (
+    current_snapshot,
+    observe_rows,
     overwrite_snapshot,
     read_month,
-    resolve_table_path,
     table_path,
     write_month_idempotent,
 )
@@ -79,10 +90,11 @@ class PipelineResult:
 
 def _extract_to_raw(
     spark: SparkSession, dsv_path: str, root: str, table: str, yyyymm: int
-) -> None:
+) -> StructType:
     """S1-S5: distributed DSV scan → month-keyed JSON raw rows →
     partition-overwrite write (replaces the pandas chunk loop,
-    reference ``dags/pdq_etl_dag.py:168-251``)."""
+    reference ``dags/pdq_etl_dag.py:168-251``). Returns the schema it
+    wrote, for the transform's raw read."""
     df = read_dsv(spark, dsv_path)
     df = df.withColumn(
         "yyyymm", derive_yyyymm("CYCLE_YEAR_MONTH", "CYCLE_YEAR", "CYCLE_MONTH")
@@ -93,19 +105,30 @@ def _extract_to_raw(
     )
     raw = encode_raw_json(df)
     write_month_idempotent(raw, root, "raw", table)
+    return raw.schema
 
 
 def _transform(
-    spark: SparkSession, root: str, table: str, fields: list[str], transform_fn, yyyymm: int
-) -> DataFrame:
+    spark: SparkSession,
+    root: str,
+    table: str,
+    fields: list[str],
+    transform_fn,
+    yyyymm: int,
+    raw_schema: StructType,
+) -> tuple[DataFrame, Observation]:
     """S3+P1 read + typed transform → staging write (reference
-    ``spark_jobs/transform_*.py``)."""
-    raw = read_month(spark, root, "raw", table, yyyymm)
+    ``spark_jobs/transform_*.py``). Returns the staging month read back
+    and the observation holding its written row count."""
+    raw = read_month(spark, root, "raw", table, yyyymm, schema=raw_schema)
     parsed = parse_raw_json(raw, tolerant_string_schema(fields))
     typed = transform_fn(parsed.drop("yyyymm"), yyyymm=None)
-    typed = typed.where(F.col("yyyymm") == F.lit(yyyymm))
+    typed, rows = observe_rows(typed.where(F.col("yyyymm") == F.lit(yyyymm)))
     write_month_idempotent(typed, root, "staging", f"{table}_monthly")
-    return read_month(spark, root, "staging", f"{table}_monthly", yyyymm)
+    staged = read_month(
+        spark, root, "staging", f"{table}_monthly", yyyymm, schema=typed.schema
+    )
+    return staged, rows
 
 
 def run_monthly_pipeline(
@@ -119,15 +142,17 @@ def run_monthly_pipeline(
     same month overwrites exactly that month's partitions."""
     # extract (the reference fans these out; Spark jobs queue on the
     # scheduler anyway — sequential calls, parallel tasks)
-    _extract_to_raw(spark, operator_dsv, root, "operator_cycle", yyyymm)
-    _extract_to_raw(spark, lease_dsv, root, "lease_cycle", yyyymm)
+    op_raw = _extract_to_raw(spark, operator_dsv, root, "operator_cycle", yyyymm)
+    lease_raw = _extract_to_raw(spark, lease_dsv, root, "lease_cycle", yyyymm)
 
     # transform to typed staging
-    op = _transform(
-        spark, root, "operator_cycle", OPERATOR_FIELDS, transform_operator_monthly, yyyymm
+    op, op_rows = _transform(
+        spark, root, "operator_cycle", OPERATOR_FIELDS, transform_operator_monthly,
+        yyyymm, op_raw,
     )
-    lease = _transform(
-        spark, root, "lease_cycle", LEASE_FIELDS, transform_lease_monthly, yyyymm
+    lease, lease_rows = _transform(
+        spark, root, "lease_cycle", LEASE_FIELDS, transform_lease_monthly,
+        yyyymm, lease_raw,
     )
 
     # model curated: dims (dedup + upsert) and facts (month overwrite)
@@ -146,29 +171,34 @@ def run_monthly_pipeline(
     for name, new in dims.items():
         pk = {"dim_operator": ("operator_no",), "dim_district": ("district_no",),
               "dim_field": ("field_no",), "dim_lease": ("lease_key",)}[name]
-        try:
-            existing = spark.read.parquet(
-                resolve_table_path(table_path(root, "curated", name))
-            )
-        except Exception:
-            existing = None
-        merged = upsert_dim(existing, new, pk=pk)
+        # a dim with no live snapshot is new; one whose snapshot cannot
+        # be read fails here instead of restarting from this month alone
+        existing = None
+        if current_snapshot(table_path(root, "curated", name)) is not None:
+            existing = read_month(spark, root, "curated", name, schema=new.schema)
+        merged, rows = observe_rows(upsert_dim(existing, new, pk=pk))
         # snapshot-pointer commit: the write consumes the old snapshot's
         # files before the atomic flip, so no checkpoint/materialization
         # of the read-modify-write input is needed
         overwrite_snapshot(merged, root, "curated", name)
-        dim_counts[name] = read_month(spark, root, "curated", name).count()
+        dim_counts[name] = rows.get["n_rows"]
 
-    fact_op = project_fact(op, ("operator_no",), MEASURES)
-    fact_lease = project_fact(
-        lease, ("lease_key", "operator_no", "district_no", "field_no"), MEASURES
+    fact_op, fact_op_rows = observe_rows(project_fact(op, ("operator_no",), MEASURES))
+    fact_lease, fact_lease_rows = observe_rows(
+        project_fact(
+            lease, ("lease_key", "operator_no", "district_no", "field_no"), MEASURES
+        )
     )
     write_month_idempotent(fact_op, root, "curated", "fact_operator_monthly")
     write_month_idempotent(fact_lease, root, "curated", "fact_lease_monthly")
 
     # DQ gates (hard) + rollup reconciliation (soft, logged)
-    f_op = read_month(spark, root, "curated", "fact_operator_monthly", yyyymm)
-    f_lease = read_month(spark, root, "curated", "fact_lease_monthly", yyyymm)
+    f_op = read_month(
+        spark, root, "curated", "fact_operator_monthly", yyyymm, schema=fact_op.schema
+    )
+    f_lease = read_month(
+        spark, root, "curated", "fact_lease_monthly", yyyymm, schema=fact_lease.schema
+    )
     assert_non_negative(f_op, MEASURES)
     assert_non_negative(f_lease, MEASURES)
     assert_unique_grain(f_op, ("operator_no", "yyyymm"))
@@ -178,10 +208,10 @@ def run_monthly_pipeline(
     )
     result = PipelineResult(
         yyyymm=yyyymm,
-        staging_operator_rows=op.count(),
-        staging_lease_rows=lease.count(),
-        fact_operator_rows=f_op.count(),
-        fact_lease_rows=f_lease.count(),
+        staging_operator_rows=op_rows.get["n_rows"],
+        staging_lease_rows=lease_rows.get["n_rows"],
+        fact_operator_rows=fact_op_rows.get["n_rows"],
+        fact_lease_rows=fact_lease_rows.get["n_rows"],
         rollup_mismatches=mismatches.count(),
         dims=dim_counts,
     )

@@ -69,6 +69,12 @@ def get_spark(
         # values) as extra_conf, which overrides these defaults.
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.ui.enabled", "false")
+        # the compiled-class cache (LRU, default 100 entries) must hold a
+        # whole pipeline month: at 100, each warm month of
+        # run_monthly_pipeline compiled 143-144 classes (the LRU missed
+        # on every class of every month); at 1000 it compiles 21
+        # (CodegenMetrics compile count, perfbench pdq_monthly feed)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", "8g")
     )
     if master:

@@ -27,8 +27,9 @@ import os
 import random
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Upper bound on commit_tables' internal manifest-CAS retries: enough to
 #: absorb realistic co-located sink contention (retries cost ~1ms each —
@@ -423,6 +424,7 @@ def read_month(
     layer: MedallionLayer | str,
     table: str,
     yyyymm: int | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Partition-pruned month-slice read (S3).
 
@@ -433,10 +435,18 @@ def read_month(
     Segment-aware (ADVICE r10): append-shaped tables read as the union
     of their manifest segments — the per-table pointer alone would
     return only the newest increment.
+
+    ``schema``: the schema the caller knows the table was written with
+    (e.g. the ``.schema`` of the DataFrame it just wrote). Given, the
+    read skips Parquet schema inference — one footer-reading Spark job
+    per read — and the partition columns take their types from it.
+    Without it the schema is inferred (merged across segments).
     """
     dirs = _live_table_dirs(root, layer, table)
     reader = spark.read
-    if len(dirs) > 1:
+    if schema is not None:
+        reader = reader.schema(schema)
+    elif len(dirs) > 1:
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(*dirs)
     if yyyymm is not None:
@@ -644,6 +654,26 @@ def cluster_write(
     return path
 
 
+def observe_rows(
+    df: DataFrame, measures: dict[str, "F.Column"] | None = None
+) -> tuple[DataFrame, Observation]:
+    """Attach a row count (``n_rows``) plus any caller ``measures`` to
+    ``df`` as observed metrics; returns ``(observed_df, observation)``.
+
+    ``df.observe`` computes the metrics inside whatever job executes the
+    returned DataFrame — typically its write — so the count costs no
+    extra job and no second scan: at 100 TB a separate post-write
+    COUNT/SUM pass is a second full read of the table. Read the metrics
+    with ``observation.get`` after that action has run (it blocks until
+    then); a write of zero rows observes ``n_rows == 0``. Run the
+    observed DataFrame exactly once."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("n_rows")]
+    for name, expr in (measures or {}).items():
+        metrics.append(expr.alias(name))
+    return df.observe(obs, *metrics), obs
+
+
 def write_month_with_audit(
     df: DataFrame,
     root: str,
@@ -651,21 +681,10 @@ def write_month_with_audit(
     table: str,
     audit_measures: dict[str, "F.Column"] | None = None,
 ) -> dict:
-    """Idempotent month write + single-pass audit metrics.
-
-    ``df.observe`` attaches aggregate metrics to the SAME job that
-    performs the write, so the audit (row count + any caller measures,
-    e.g. exact decimal sums for downstream reconciliation) costs zero
-    extra scans — at 100 TB a separate post-write COUNT/SUM pass is a
-    second full read of the table; this is the pattern that removes it.
-    Returns the observed metrics dict."""
-    from pyspark.sql import Observation
-
-    obs = Observation(f"audit_{table}")
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for name, expr in (audit_measures or {}).items():
-        metrics.append(expr.alias(name))
-    observed = df.observe(obs, *metrics)
+    """Idempotent month write + single-pass audit metrics
+    (:func:`observe_rows` on the write job). Returns the observed
+    metrics dict."""
+    observed, obs = observe_rows(df, audit_measures)
     write_month_idempotent(observed, root, layer, table)
     return dict(obs.get)
 

@@ -15,10 +15,24 @@ Asserts the judge-visible semantic gotchas from SURVEY.md §7.3:
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
+from pyspark.errors import AnalysisException
 
-from novi_pdq_etl_project_prod_spark.plans.pipeline import run_monthly_pipeline
+from novi_pdq_etl_project_prod_spark.operators.quality import (
+    rollup_reconciliation_suite,
+)
+from novi_pdq_etl_project_prod_spark.operators.transform import MEASURES
+from novi_pdq_etl_project_prod_spark.plans.pipeline import (
+    PipelineResult,
+    run_monthly_pipeline,
+)
+from novi_pdq_etl_project_prod_spark.sources.layers import (
+    current_snapshot,
+    read_month,
+    table_path,
+)
 
 OPERATOR_DSV = """\
  OPERATOR_NO }OPERATOR_NAME} CYCLE_YEAR }CYCLE_MONTH}CYCLE_YEAR_MONTH}OPER_OIL_PROD_VOL}OPER_GAS_PROD_VOL}OPER_COND_PROD_VOL}OPER_CSGD_PROD_VOL
@@ -114,3 +128,79 @@ def test_pipeline_second_month_preserves_first(spark, pipeline_env):
     months = {r.yyyymm for r in fact.select("yyyymm").distinct().collect()}
     assert months == {202401, 202402}
     assert fact.where("yyyymm = 202402").count() == 1  # operator 104 only
+
+
+def _land(spark, pipeline_env, root, yyyymm):
+    op_dsv, lease_dsv, _ = pipeline_env
+    return run_monthly_pipeline(spark, op_dsv, lease_dsv, root, yyyymm)
+
+
+def _recounted(spark, root, yyyymm):
+    """The differential twin of the pipeline's observed counts: re-read
+    every table the month wrote and ``count()`` it."""
+
+    def month(layer, table):
+        return read_month(spark, root, layer, table, yyyymm)
+
+    f_op = month("curated", "fact_operator_monthly")
+    f_lease = month("curated", "fact_lease_monthly")
+    return PipelineResult(
+        yyyymm=yyyymm,
+        staging_operator_rows=month("staging", "operator_cycle_monthly").count(),
+        staging_lease_rows=month("staging", "lease_cycle_monthly").count(),
+        fact_operator_rows=f_op.count(),
+        fact_lease_rows=f_lease.count(),
+        rollup_mismatches=rollup_reconciliation_suite(
+            f_op, f_lease, keys=("operator_no",), measures=MEASURES
+        ).count(),
+        dims={
+            name: read_month(spark, root, "curated", name).count()
+            for name in ("dim_operator", "dim_district", "dim_field", "dim_lease")
+        },
+    )
+
+
+def test_observed_counts_match_recounted_tables(spark, pipeline_env, tmp_path):
+    """Every PipelineResult count is observed on the write that produced
+    the rows; each must equal a count() of the table read back. 202402
+    has no lease rows, so it covers observed writes of zero rows."""
+    root = str(tmp_path / "warehouse")
+    for yyyymm in (202401, 202402):
+        res = _land(spark, pipeline_env, root, yyyymm)
+        assert res == _recounted(spark, root, yyyymm)
+    assert res.staging_lease_rows == 0 and res.dims["dim_lease"] == 4
+
+
+def test_broken_dim_snapshot_fails_instead_of_restarting(spark, pipeline_env, tmp_path):
+    """A dim whose live snapshot is unreadable must stop the month, not
+    be silently replaced by this month's rows alone (history lost)."""
+    root = str(tmp_path / "warehouse")
+    _land(spark, pipeline_env, root, 202401)
+    dim = table_path(root, "curated", "dim_lease")
+    live = current_snapshot(dim)
+    shutil.rmtree(os.path.join(dim, live))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        _land(spark, pipeline_env, root, 202402)
+    assert current_snapshot(dim) == live
+
+
+#: Spark jobs one warm month of the fixture may run (36 measured at
+#: SPARK_GRAFT_CPUS 2 and 4): the writes, the non-negative and
+#: unique-grain gates, the rollup count and the CSV header reads. A
+#: re-count or a schema-inferring re-read of a written table adds jobs.
+WARM_MONTH_JOBS = 36
+
+
+def test_warm_month_job_count(spark, pipeline_env, tmp_path):
+    root = str(tmp_path / "warehouse")
+    _land(spark, pipeline_env, root, 202401)
+    sc = spark.sparkContext
+    group = "test_warm_month_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        _land(spark, pipeline_env, root, 202401)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= WARM_MONTH_JOBS
