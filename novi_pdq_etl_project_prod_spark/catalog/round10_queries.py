@@ -24,11 +24,7 @@ from novi_pdq_etl_project_prod_spark.catalog.llm_queries import (
     _M8_EDGE_CTES,
     minhash_near_duplicates_md5,
 )
-from novi_pdq_etl_project_prod_spark.session import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from novi_pdq_etl_project_prod_spark.session import read_table as _t
 
 
 # ---------------------------------------------------------------------------

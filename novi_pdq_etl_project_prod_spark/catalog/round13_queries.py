@@ -53,11 +53,7 @@ from novi_pdq_etl_project_prod_spark.catalog.round12_queries import (
     _PROBE_IDS,
     _lex_channel,
 )
-from novi_pdq_etl_project_prod_spark.session import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from novi_pdq_etl_project_prod_spark.session import read_table as _t
 
 
 QUERIES = {}

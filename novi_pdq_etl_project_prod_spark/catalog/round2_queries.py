@@ -33,7 +33,7 @@ from novi_pdq_etl_project_prod_spark.operators.stats import (
     zscore_outliers,
 )
 from novi_pdq_etl_project_prod_spark.operators.timeseries import gap_fill_monthly
-from novi_pdq_etl_project_prod_spark.session import read_events, read_table
+from novi_pdq_etl_project_prod_spark.session import read_events, read_table as _t
 from novi_pdq_etl_project_prod_spark.sources.skipping import (
     zorder_col,
     zorder_col_multi,
@@ -43,11 +43,6 @@ from novi_pdq_etl_project_prod_spark.sources.skipping import (
 from novi_pdq_etl_project_prod_spark.streaming.events import (
     click_purchase_attribution,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # assert-and-adapt fixture read: absorbs driver testdata schema drift
-    return read_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------

@@ -83,12 +83,7 @@ from novi_pdq_etl_project_prod_spark.operators.stats import (
 )
 from novi_pdq_etl_project_prod_spark.operators.timeseries import weighted_moving_avg
 from novi_pdq_etl_project_prod_spark.operators.windows import cumulative_distinct
-from novi_pdq_etl_project_prod_spark.session import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # assert-and-adapt fixture read: absorbs driver testdata schema drift
-    return read_table(spark, sf_dir, name)
+from novi_pdq_etl_project_prod_spark.session import read_table as _t
 
 
 # ---------------------------------------------------------------------------

@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from novi_pdq_etl_project_prod_spark.operators import text as TX
-from novi_pdq_etl_project_prod_spark.session import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from novi_pdq_etl_project_prod_spark.session import read_table as _t
 
 
 # ---------------------------------------------------------------------------

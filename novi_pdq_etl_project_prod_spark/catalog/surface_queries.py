@@ -18,12 +18,7 @@ from novi_pdq_etl_project_prod_spark.operators.quality import (
 )
 
 
-from novi_pdq_etl_project_prod_spark.session import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # assert-and-adapt fixture read: absorbs driver testdata schema drift
-    return read_table(spark, sf_dir, name)
+from novi_pdq_etl_project_prod_spark.session import read_table as _t
 
 
 def _dec(col, prec: int = 18, scale: int = 2):

@@ -18,13 +18,8 @@ from pyspark.sql import functions as F
 from novi_pdq_etl_project_prod_spark.operators.joins import asof_join
 from novi_pdq_etl_project_prod_spark.operators.skew import salted_agg
 from novi_pdq_etl_project_prod_spark.operators.similarity import cosine, _as_double
-from novi_pdq_etl_project_prod_spark.session import read_events, read_table
+from novi_pdq_etl_project_prod_spark.session import read_events, read_table as _t
 from novi_pdq_etl_project_prod_spark.streaming.sessions import sessionize_batch
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # assert-and-adapt fixture read: absorbs driver testdata schema drift
-    return read_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------

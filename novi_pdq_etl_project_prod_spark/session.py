@@ -19,8 +19,10 @@ session construction and turns on the configs that matter at 100 TB:
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -161,6 +163,35 @@ def _footer_type(path: str, column: str) -> str:
     return str(schema.field(column).type)
 
 
+#: ``path -> (fingerprint, StructType)``: the Parquet schema Spark
+#: inferred for each fixture path, and the fingerprint of the files it
+#: was inferred from. One entry per path; a new fingerprint replaces it.
+#: No lock: each entry is stored whole and is right for its own
+#: fingerprint, so a lost race costs at most one more inference.
+_INFERRED: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """``(size, st_mtime_ns)`` of a file; for a directory, ``(relative
+    path, size, st_mtime_ns)`` of every file under it, ``_``/``.``-prefixed
+    ones included (Spark reads ``_common_metadata`` to infer). None when
+    the path cannot be stat'ed locally (missing, or a non-local URI)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs.sort()
+            for n in sorted(names):
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append((os.path.relpath(f, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(files)
+    except OSError:
+        return None
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read a driver fixture, normalized to its canonical schema.
 
@@ -179,13 +210,33 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
       casts back to canonical;
     - already-canonical tables return the raw scan unchanged, keeping
       plans free of cast projections (pushdown/pruning intact).
+
+    The inferred Parquet schema is memoized per path, keyed by the
+    fingerprint of the files under it (``_fingerprint``: size and mtime
+    of each file). A read with the same fingerprint passes that schema
+    to ``spark.read.schema(...)`` and starts no inference job; any change
+    to any file under the path re-infers. This is exact: without
+    ``mergeSchema`` Spark infers from one footer of the listed files, the
+    files are still listed and read fresh on every call, and
+    ``nanosAsLong`` is set before every scan, so a memoized schema was
+    inferred under the same conf. A path that cannot be stat'ed locally
+    is read as before and not memoized, so its error is unchanged.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    # fingerprint BEFORE the scan: a file replaced mid-read leaves an entry
+    # under the old fingerprint, which the next read misses
+    key = _fingerprint(path)
+    memo = _INFERRED.get(path)
+    if memo is not None and memo[0] == key:  # stored keys are never None
+        df = spark.read.schema(memo[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _INFERRED[path] = (key, df.schema)
     canon = CANONICAL_FIXTURES.get(name)
     if canon is None:
         return df
