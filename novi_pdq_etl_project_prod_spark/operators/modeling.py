@@ -82,65 +82,6 @@ def upsert_dim(
     )
 
 
-def merge_into_snapshot(
-    existing: DataFrame | None,
-    source: DataFrame,
-    pk: tuple[str, ...],
-    update_cols: tuple[str, ...] | None = None,
-    delete_condition: Column | None = None,
-) -> DataFrame:
-    """MERGE semantics over a snapshot table, as a pure DataFrame op:
-
-    - matched + ``delete_condition`` → row removed;
-    - matched otherwise → ``update_cols`` taken from source (others kept);
-    - not matched → source row inserted.
-
-    This is the general form of ``upsert_dim`` (which is latest-wins on
-    every column). The result is the new snapshot; persist it with
-    ``overwrite_snapshot``. On a transactional table format the same
-    call-site becomes a real MERGE — the operator signature is the
-    contract, the storage swap is mechanical.
-    """
-    if existing is None:
-        return source if delete_condition is None else source.where(
-            ~F.coalesce(delete_condition, F.lit(False))
-        )
-    update_cols = tuple(
-        update_cols
-        if update_cols is not None
-        else [c for c in source.columns if c not in pk]
-    )
-    keep_cols = [c for c in existing.columns if c not in pk and c not in update_cols]
-    src = source.select(
-        *[F.col(k) for k in pk],
-        *[F.col(c).alias(f"__src_{c}") for c in update_cols],
-        F.lit(True).alias("__matched_src"),
-    )
-    joined = existing.join(src, list(pk), "full_outer")
-    is_matched = F.col("__matched_src") & existing[pk[0]].isNotNull()
-    merged = joined.select(
-        *[F.col(k) for k in pk],
-        *[
-            F.when(F.col("__matched_src").isNotNull(), F.col(f"__src_{c}"))
-            .otherwise(F.col(c))
-            .alias(c)
-            for c in update_cols
-        ],
-        *[F.col(c) for c in keep_cols],
-    )
-    if delete_condition is not None:
-        # delete applies to matched rows only
-        was_matched = joined.select(
-            *[F.col(k) for k in pk], F.col("__matched_src").isNotNull().alias("__m")
-        )
-        merged = (
-            merged.join(was_matched, list(pk))
-            .where(~(F.col("__m") & F.coalesce(delete_condition, F.lit(False))))
-            .drop("__m")
-        )
-    return merged
-
-
 def merge_frames(
     target: DataFrame | None,
     source: DataFrame,
@@ -153,8 +94,8 @@ def merge_frames(
 ) -> DataFrame:
     """Declarative MERGE as a pure DataFrame op (VERDICT r07 item 5) —
     the Delta-parity idiom users reach for first, composing the
-    snapshot-layer pieces (:func:`merge_into_snapshot`, CDC tombstones)
-    behind ONE entry point:
+    snapshot-layer pieces (latest-wins :func:`upsert_dim`, CDC
+    tombstones) behind ONE entry point:
 
     - ``when_matched_update``: {target_col: SQL expr} evaluated over the
       joined row with aliases ``t`` (target) and ``s`` (source) — e.g.

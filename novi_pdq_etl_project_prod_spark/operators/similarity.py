@@ -921,7 +921,7 @@ def build_ivf_index(
     ``partitionBy("list_id")`` for directory-level pruning instead).
     Both go through the ``_CURRENT`` pointer protocol, so a rebuild is
     an atomic swap: live queries keep the old index until the flip, and
-    :func:`sources.layers.read_table_at_version` can pin a search to a
+    :func:`sources.layers.read_snapshot_as_of` can pin a search to a
     prior index version for reproducibility.
 
     The DEFAULT geometry is density-scaled (``n_lists=None`` →

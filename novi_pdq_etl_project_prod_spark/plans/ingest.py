@@ -506,9 +506,9 @@ def run_incremental_ingest(
         read_manifest_table,
     )
     from novi_pdq_etl_project_prod_spark.streaming.events import (
-        _last_applied_batch,
-        _maybe_migrate_legacy,
-        batch_marker_key,
+        _exactly_once,
+        _maybe_maintenance,
+        _run_available_now,
     )
 
     if span_k is not None:
@@ -521,8 +521,6 @@ def run_incremental_ingest(
                 f"span_k={span_k} needs table names for "
                 f"{sorted(missing)} in `tables` (see INGEST_TABLES)"
             )
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
     allow = set(schema_allow) if schema_allow is not None else set()
     # cumulative funnel accounting, the stream_write_with_expectations
     # convention: totals ride the same atomic commit as the data, keyed
@@ -530,12 +528,7 @@ def run_incremental_ingest(
     # manifest meta entry instead of re-counting report tables
     counts_key = f"ingest_counts:{tables['corpus']}"
 
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: the whole funnel's outputs are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
@@ -554,7 +547,7 @@ def run_incremental_ingest(
                     raise ExpectationError(
                         f"{tables['corpus']}: unreviewed schema drift "
                         f"{blocked}; allowed statuses {sorted(allow)} — "
-                        f"batch {_batch_id} not committed"
+                        f"batch {batch_id} not committed"
                     )
                 if drift:
                     extra_meta[f"schema_drift:{tables['corpus']}"] = drift
@@ -675,7 +668,7 @@ def run_incremental_ingest(
                     committed,
                     root,
                     layer,
-                    meta={marker: _batch_id, counts_key: total, **extra_meta},
+                    meta={marker: batch_id, counts_key: total, **extra_meta},
                     append_tables=tuple(committed),
                     # self-validating physical row counts for the tables
                     # whose sizes this funnel already computed for its
@@ -691,27 +684,15 @@ def run_incremental_ingest(
                         if t in committed
                     },
                 )
-            if maintenance_every and _batch_id % maintenance_every == 0:
-                # cadence hook (VERDICT r11 #7): the tick runs AFTER the
-                # batch's own commit, outside the cache scope; it is
-                # idempotent (thresholds re-audit) and CAS-protected, so
-                # firing on batch-id modulo is safe under replay — a
-                # replayed batch skips both commit and tick above
-                from novi_pdq_etl_project_prod_spark.plans.maintenance import (
-                    run_maintenance_tick,
-                )
-
-                run_maintenance_tick(
-                    spark, root, layer, **(maintenance_kwargs or {})
-                )
+            # cadence hook (VERDICT r11 #7): the tick runs AFTER the
+            # batch's own commit, outside the cache scope
+            _maybe_maintenance(
+                spark, root, layer, batch_id,
+                maintenance_every, maintenance_kwargs,
+            )
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()

@@ -116,9 +116,8 @@ def _live_table_dirs(
     reads would pin such tables to the stale manifest version forever.
     Multi-segment tables have no correct pointer read at all (the
     pointer names the newest increment), so the manifest union wins
-    there. Direct readers (:func:`read_month`,
-    :func:`read_table_evolved`) route through it so they always see
-    the full table.
+    there. The direct reader (:func:`read_month`) routes through it so
+    it always sees the full table.
     """
     path = table_path(root, layer, table)
     entry = read_manifest(root, layer).get(table)
@@ -440,40 +439,22 @@ def read_month(
     (e.g. the ``.schema`` of the DataFrame it just wrote). Given, the
     read skips Parquet schema inference — one footer-reading Spark job
     per read — and the partition columns take their types from it.
-    Without it the schema is inferred (merged across segments).
+
+    Without it the read is schema-evolution-safe: ``mergeSchema``
+    reconciles every file's footer (every month partition, every
+    segment) into the union schema, so months written before a column
+    existed surface it as NULL instead of failing or dropping it — the
+    month-at-a-time load pattern (one spark-submit per month, schema
+    drifting across years) makes this the right default for historical
+    reads. It costs one footer read per file at planning time, no data
+    pass; partition pruning still applies on top.
     """
-    dirs = _live_table_dirs(root, layer, table)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    elif len(dirs) > 1:
+    else:
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*dirs)
-    if yyyymm is not None:
-        df = df.where(F.col("yyyymm") == F.lit(int(yyyymm)))
-    return df
-
-
-def read_table_evolved(
-    spark: SparkSession,
-    root: str,
-    layer: MedallionLayer | str,
-    table: str,
-    yyyymm: int | None = None,
-) -> DataFrame:
-    """Schema-evolution-safe table read: months written before a column
-    existed surface it as NULL instead of failing or silently dropping it.
-
-    ``mergeSchema`` makes the scan reconcile every partition's parquet
-    footer into the union schema — the month-at-a-time load pattern
-    (reference: one spark-submit per month, schema drifts across years)
-    makes this the correct default for historical reads. Costs one
-    footer read per file at planning time (no data pass); partition
-    pruning still applies on top. Segment-aware (ADVICE r10): append-
-    shaped tables read as the union of their manifest segments."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *_live_table_dirs(root, layer, table)
-    )
+    df = reader.parquet(*_live_table_dirs(root, layer, table))
     if yyyymm is not None:
         df = df.where(F.col("yyyymm") == F.lit(int(yyyymm)))
     return df
@@ -672,77 +653,6 @@ def observe_rows(
     for name, expr in (measures or {}).items():
         metrics.append(expr.alias(name))
     return df.observe(obs, *metrics), obs
-
-
-def write_month_with_audit(
-    df: DataFrame,
-    root: str,
-    layer: MedallionLayer | str,
-    table: str,
-    audit_measures: dict[str, "F.Column"] | None = None,
-) -> dict:
-    """Idempotent month write + single-pass audit metrics
-    (:func:`observe_rows` on the write job). Returns the observed
-    metrics dict."""
-    observed, obs = observe_rows(df, audit_measures)
-    write_month_idempotent(observed, root, layer, table)
-    return dict(obs.get)
-
-
-def list_snapshots(path: str) -> list[dict]:
-    """Version history of a snapshot-committed table: one dict per
-    retained snapshot dir — ``name``, integer ``version``, commit
-    ``mtime`` (epoch seconds), ``is_live``. Ordered oldest-first.
-
-    Only snapshots surviving GC are listed (the live one, the newest
-    ``GC_RETAIN_PREVIOUS``, anything inside the grace window) — this is
-    a bounded retention history like a short Delta/Iceberg log tail, not
-    an unbounded time-travel archive; raise ``GC_RETAIN_PREVIOUS`` for
-    longer reach.
-    """
-    live = os.path.basename(resolve_table_path(path))
-    out = []
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(_SNAPSHOT_PREFIX):
-            continue
-        full = os.path.join(path, entry)
-        if not os.path.isdir(full):
-            continue
-        out.append(
-            {
-                "name": entry,
-                "version": int(entry[len(_SNAPSHOT_PREFIX):]),
-                "mtime": os.path.getmtime(full),
-                "is_live": entry == live,
-            }
-        )
-    return out
-
-
-def read_table_at_version(spark, path: str, version: int | str):
-    """Time-travel read: the table as of snapshot ``version`` (an integer
-    or a full ``_snap_vNNNNNNNN`` name).
-
-    The snapshot-pointer layout makes old versions first-class read
-    targets — a committed snapshot dir is immutable, so reading one is
-    just scanning it directly, bypassing ``_CURRENT``. Raises
-    ``FileNotFoundError`` naming the retained versions when the request
-    was GC'd (or never existed), so callers can distinguish "too old"
-    from "corrupt".
-    """
-    if isinstance(version, int):
-        name = f"{_SNAPSHOT_PREFIX}{version:08d}"
-    else:
-        name = version
-    target = os.path.join(path, name)
-    if not os.path.isdir(target):
-        have = [s["name"] for s in list_snapshots(path)]
-        raise FileNotFoundError(
-            f"snapshot {name!r} not present under {path} "
-            f"(retained: {have or 'none'} — raise GC_RETAIN_PREVIOUS "
-            f"for longer time-travel reach)"
-        )
-    return spark.read.parquet(target)
 
 
 # ---------------------------------------------------------------------------

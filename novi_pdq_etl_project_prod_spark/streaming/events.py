@@ -19,6 +19,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from novi_pdq_etl_project_prod_spark.sources.layers import (
+    commit_tables,
+    current_manifest_version,
+    overwrite_snapshot,
+    read_manifest,
+    read_manifest_meta,
+    read_manifest_table,
+    read_manifest_tables,
+    table_path,
+    write_month_idempotent,
+)
+
 #: The events fixture shape with a proper timestamp (TESTDATA.md; the
 #: parquet stores nanos — see session.read_events for the batch path).
 EVENTS_SCHEMA = T.StructType(
@@ -62,10 +74,6 @@ def _last_applied_batch(root: str, layer: str, marker: str) -> int | None:
     Migration now happens once at sink startup
     (:func:`_maybe_migrate_legacy` / :func:`migrate_legacy_batch_marker`),
     as its own commit, never inside the gate."""
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        read_manifest_meta,
-    )
-
     last = read_manifest_meta(root, layer).get(marker)
     return last if isinstance(last, int) else None
 
@@ -107,11 +115,6 @@ def migrate_legacy_batch_marker(
     migrates automatically at sink startup. No-op (returns None) when
     there is no legacy key or the namespaced marker already exists;
     otherwise returns the migrated batch id."""
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_meta,
-    )
-
     meta = read_manifest_meta(root, layer)
     legacy = meta.get(_LEGACY_MARKER_KEY)
     marker = batch_marker_key(checkpoint_dir)
@@ -135,6 +138,82 @@ def _maybe_migrate_legacy(root: str, layer: str, checkpoint_dir: str) -> None:
     explicitly."""
     if _checkpoint_has_progress(checkpoint_dir):
         migrate_legacy_batch_marker(root, layer, checkpoint_dir)
+
+
+def _run_available_now(
+    df: DataFrame,
+    on_batch,
+    checkpoint_dir: str,
+    output_mode: str = "append",
+) -> None:
+    """The one micro-batch runner behind every ``foreachBatch`` sink:
+    calls ``on_batch(batch_df, batch_id)`` for each NON-EMPTY
+    micro-batch of all currently-available input (availableNow trigger)
+    and blocks until that input is processed. The checkpoint is the
+    query's durable identity: a restart on the same ``checkpoint_dir``
+    resumes after the last completed batch."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            on_batch(batch_df, batch_id)
+
+    q = (
+        df.writeStream.foreachBatch(_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _exactly_once(root: str, layer: str, checkpoint_dir: str, apply):
+    """The exactly-once gate of the manifest sinks, as an ``on_batch``
+    callback for :func:`_run_available_now`. foreachBatch is only
+    at-least-once: a batch replayed after a crash between the manifest
+    commit and the checkpoint's commit entry would be applied twice. So
+    ``apply(batch_df, batch_id, marker)`` must put ``{marker: batch_id}``
+    in the meta of the SAME ``commit_tables`` call as its data (commit
+    and applied-marker flip atomically), and the gate drops every batch
+    whose id is <= the marker the layer's manifest already records —
+    batch ids increase monotonically per checkpoint. The legacy-marker
+    migration runs once, here, when the sink starts."""
+    marker = batch_marker_key(checkpoint_dir)
+    _maybe_migrate_legacy(root, layer, checkpoint_dir)
+
+    def _gated(batch_df: DataFrame, batch_id: int) -> None:
+        last = _last_applied_batch(root, layer, marker)
+        if last is not None and batch_id <= last:
+            return  # replayed batch: its commit already landed
+        apply(batch_df, batch_id, marker)
+
+    return _gated
+
+
+def _run_snapshot_fold(
+    stream: DataFrame, root: str, table: str, checkpoint_dir: str, fold
+) -> None:
+    """The snapshot-fold sink: per micro-batch, read the live curated
+    snapshot of ``table``, fold the batch into it with
+    ``fold(existing_or_None, batch_df)`` and commit the result as the
+    table's next snapshot (one ``_CURRENT`` pointer flip). ``existing``
+    is None only while the table has no pointer; any other read error
+    fails the batch, so an unreadable snapshot is never replaced by one
+    batch's rows. The folds are idempotent (a replay re-folds rows the
+    snapshot already holds), so these sinks need no batch marker."""
+    from novi_pdq_etl_project_prod_spark.operators.modeling import (
+        _read_live_snapshot,
+    )
+
+    path = table_path(root, "curated", table)
+
+    def _fold_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        existing = _read_live_snapshot(batch_df.sparkSession, path)
+        # snapshot-pointer commit reads the old snapshot's files during
+        # the new snapshot's write job — no materialization needed
+        overwrite_snapshot(fold(existing, batch_df), root, "curated", table)
+
+    _run_available_now(stream, _fold_batch, checkpoint_dir)
 
 
 def read_event_stream(
@@ -197,7 +276,10 @@ def monthly_event_rollup(events: DataFrame, watermark: str = "35 days") -> DataF
             (F.year("ts") * 100 + F.month("ts")).alias("yyyymm"),
             F.col("user_id"),
         )
-        .agg(F.count(F.lit(1)).alias("n_events"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        )
     )
 
 
@@ -353,35 +435,14 @@ def stream_to_medallion(
     identical partitions (idempotent), so the sink needs no transaction
     log. Blocks until available input is processed (availableNow).
     """
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        write_month_idempotent,
+    _run_available_now(
+        monthly_event_rollup(events, watermark),
+        lambda batch_df, _batch_id: write_month_idempotent(
+            batch_df, root, "staging", table
+        ),
+        checkpoint_dir,
+        "complete",
     )
-
-    monthly = (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            (F.year("ts") * 100 + F.month("ts")).alias("yyyymm"),
-            F.col("user_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-    )
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_month_idempotent(batch_df, root, "staging", table)
-
-    q = (
-        monthly.writeStream.foreachBatch(_write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_to_jdbc_monthly(
@@ -407,35 +468,14 @@ def stream_to_jdbc_monthly(
         write_jdbc_month_idempotent,
     )
 
-    monthly = (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            (F.year("ts") * 100 + F.month("ts")).alias("yyyymm"),
-            F.col("user_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-    )
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_jdbc_month_idempotent(
+    _run_available_now(
+        monthly_event_rollup(events, watermark),
+        lambda batch_df, _batch_id: write_jdbc_month_idempotent(
             batch_df, url, table, user=user, password=password, driver=driver
-        )
-
-    q = (
-        monthly.writeStream.foreachBatch(_write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
+        "complete",
     )
-    q.awaitTermination()
 
 
 def run_to_memory_sink(
@@ -487,35 +527,12 @@ def stream_upsert_dim(
         dedup_dim,
         upsert_dim,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        overwrite_snapshot,
-        resolve_table_path,
-        table_path,
-    )
 
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         latest = dedup_dim(batch_df, pk=pk, order_by=(F.col(order_col).desc(),))
-        path = resolve_table_path(table_path(root, "curated", dim_table))
-        try:
-            existing = spark.read.parquet(path)
-        except Exception:
-            existing = None
-        merged = upsert_dim(existing, latest, pk=pk)
-        # snapshot-pointer commit reads the old snapshot's files during
-        # the new snapshot's write job — no materialization needed
-        overwrite_snapshot(merged, root, "curated", dim_table)
+        return upsert_dim(existing, latest, pk=pk)
 
-    q = (
-        updates.writeStream.foreachBatch(_merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_snapshot_fold(updates, root, dim_table, checkpoint_dir, _fold)
 
 
 def enrich_stream_with_dim(
@@ -571,16 +588,7 @@ def stream_apply_changes(
     """
     from pyspark.sql import Window
 
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        overwrite_snapshot,
-        resolve_table_path,
-        table_path,
-    )
-
-    def _apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         w = Window.partitionBy(*pk).orderBy(
             *[F.col(c).desc() for c in seq_cols]
         )
@@ -589,11 +597,6 @@ def stream_apply_changes(
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        path = resolve_table_path(table_path(root, "curated", table))
-        try:
-            existing = spark.read.parquet(path)
-        except Exception:
-            existing = None
         if existing is not None:
             # batch rows win over snapshot rows at the same key: tag the
             # sides and keep the batch's row_number()==1 survivor
@@ -611,17 +614,9 @@ def stream_apply_changes(
             )
         else:
             merged = latest
-        state = merged.where(~F.col(op_col).isin(list(delete_ops)))
-        overwrite_snapshot(state, root, "curated", table)
+        return merged.where(~F.col(op_col).isin(list(delete_ops)))
 
-    q = (
-        changelog.writeStream.foreachBatch(_apply_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_snapshot_fold(changelog, root, table, checkpoint_dir, _fold)
 
 
 def stream_to_star_schema(
@@ -652,8 +647,9 @@ def stream_to_star_schema(
     after a crash between the manifest commit and the checkpoint offset
     write would re-add its delta (ADVICE r06). So the sink records the
     batch id IN the manifest it commits (``commit_tables(meta=...)``) —
-    commit and applied-marker flip atomically — and ``_publish`` no-ops
-    when ``_batch_id <= last_applied``. foreachBatch batch ids are
+    commit and applied-marker flip atomically — and the gate
+    (:func:`_exactly_once`) drops a batch whose id is
+    ``<= last_applied``. foreachBatch batch ids are
     monotonically increasing per checkpoint, which makes the ``<=``
     comparison the exactly-once gate. The marker key is NAMESPACED by
     the checkpoint location (:func:`batch_marker_key` — the query's
@@ -672,22 +668,9 @@ def stream_to_star_schema(
         dedup_dim,
         upsert_dim,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_tables,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, "curated", checkpoint_dir)
-
-    def _publish(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, "curated", marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its delta is already in the fact
-        spark = batch_df.sparkSession
-        current = read_manifest_tables(spark, root, "curated")
+    def _publish(batch_df: DataFrame, batch_id: int, marker: str) -> None:
+        current = read_manifest_tables(batch_df.sparkSession, root, "curated")
         latest = dedup_dim(
             batch_df.select(*dict.fromkeys(dim_pk + dim_cols + (order_col,))),
             pk=dim_pk,
@@ -705,22 +688,18 @@ def stream_to_star_schema(
             .groupBy(*dim_pk)
             .agg(*[F.sum(F.col(m)).alias(m) for m in measure_cols])
         )
-        meta: dict = {marker: _batch_id}
         commit_tables(
             {fact_table: merged_fact, dim_table: merged_dim},
             root,
             "curated",
-            meta=meta,
+            meta={marker: batch_id},
         )
 
-    q = (
-        updates.writeStream.foreachBatch(_publish)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        updates,
+        _exactly_once(root, "curated", checkpoint_dir, _publish),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def stream_kmv_sketch(
@@ -756,35 +735,13 @@ def stream_kmv_sketch(
         kmv_merge,
         kmv_sketch,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        overwrite_snapshot,
-        resolve_table_path,
-        table_path,
-    )
 
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_sk = kmv_sketch(batch_df, value_col, list(group_cols), k=k, salt=salt)
-        try:
-            existing = spark.read.parquet(
-                resolve_table_path(table_path(root, "curated", table))
-            )
-        except Exception:
-            existing = None
         union = batch_sk if existing is None else existing.unionByName(batch_sk)
-        merged = kmv_merge(union, list(group_cols), k=k)
-        overwrite_snapshot(merged, root, "curated", table)
+        return kmv_merge(union, list(group_cols), k=k)
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_snapshot_fold(stream, root, table, checkpoint_dir, _fold)
 
 
 def stream_sample_quantile_sketch(
@@ -819,39 +776,17 @@ def stream_sample_quantile_sketch(
         kmv_merge,
         sample_quantile_sketch,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        overwrite_snapshot,
-        resolve_table_path,
-        table_path,
-    )
 
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_sk = sample_quantile_sketch(
             batch_df, id_col, value_col, list(group_cols), k=k, salt=salt
         )
-        try:
-            existing = spark.read.parquet(
-                resolve_table_path(table_path(root, "curated", table))
-            )
-        except Exception:
-            existing = None
         union = batch_sk if existing is None else existing.unionByName(batch_sk)
-        merged = kmv_merge(
+        return kmv_merge(
             union, list(group_cols), k=k, carry_cols=[id_col, value_col]
         )
-        overwrite_snapshot(merged, root, "curated", table)
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_snapshot_fold(stream, root, table, checkpoint_dir, _fold)
 
 
 def stream_bin_counts(
@@ -886,23 +821,12 @@ def stream_bin_counts(
     hash-agg over the micro-batch + an n_bins-row snapshot write.
     """
     from novi_pdq_etl_project_prod_spark.operators.stats import bin_counts
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_table,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its counts are already in
-        spark = batch_df.sparkSession
+    def _merge_batch(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         fresh = bin_counts(batch_df, value_col, list(cut_vals), "n")
-        existing = read_manifest_table(spark, root, layer, table)
+        existing = read_manifest_table(
+            batch_df.sparkSession, root, layer, table
+        )
         merged = (
             fresh
             if existing is None
@@ -910,17 +834,11 @@ def stream_bin_counts(
             .groupBy("bin")
             .agg(F.sum("n").alias("n"))
         )
-        meta: dict = {marker: _batch_id}
-        commit_tables({table: merged}, root, layer, meta=meta)
+        commit_tables({table: merged}, root, layer, meta={marker: batch_id})
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _merge_batch), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def stream_write_with_expectations(
@@ -964,25 +882,16 @@ def stream_write_with_expectations(
     """
     from novi_pdq_etl_project_prod_spark.operators.expectations import (
         FAILED_RULES_COL,
+        ExpectationError,
         apply_expectations,
         expectation_report,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_meta,
-    )
+    from novi_pdq_etl_project_prod_spark.operators.quality import schema_drift
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
     qt = quarantine_table or f"{table}_quarantine"
     counts_key = f"expectations:{table}"
 
-    def _publish(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its rows and counts already landed
+    def _publish(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
         extra_meta: dict = {}
         # METADATA expectation (VERDICT r09 item 7), the streaming twin
@@ -994,16 +903,6 @@ def stream_write_with_expectations(
         # the unionByName loudly; committing it silently would instead
         # wedge every later merged-schema read (a retyped column fails
         # parquet schema merging long after the bad batch landed).
-        from novi_pdq_etl_project_prod_spark.operators.expectations import (
-            ExpectationError,
-        )
-        from novi_pdq_etl_project_prod_spark.operators.quality import (
-            schema_drift,
-        )
-        from novi_pdq_etl_project_prod_spark.sources.layers import (
-            read_manifest_table,
-        )
-
         allow = set(schema_allow) if schema_allow is not None else set()
         # one single-table read and ONE diff (not a whole-layer reader
         # sweep per trigger), split into blocked vs permitted
@@ -1015,7 +914,7 @@ def stream_write_with_expectations(
         if blocked:
             raise ExpectationError(
                 f"{table}: unreviewed schema drift {blocked}; allowed "
-                f"statuses {sorted(allow)} — batch {_batch_id} "
+                f"statuses {sorted(allow)} — batch {batch_id} "
                 "not committed"
             )
         if drift:
@@ -1037,7 +936,7 @@ def stream_write_with_expectations(
                 F.size(F.col(FAILED_RULES_COL)) == 0
             ).drop(FAILED_RULES_COL)
             bad = tagged.where(F.size(F.col(FAILED_RULES_COL)) > 0)
-            meta: dict = {marker: _batch_id, counts_key: total, **extra_meta}
+            meta: dict = {marker: batch_id, counts_key: total, **extra_meta}
             # append-SHAPED commit (round 10): this sink is pure append
             # — only the batch's rows are written as new manifest
             # segments; the standing good/quarantine tables are
@@ -1064,14 +963,9 @@ def stream_write_with_expectations(
         finally:
             tagged.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_publish)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _publish), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def stream_merge_into(
@@ -1112,21 +1006,8 @@ def stream_merge_into(
     from novi_pdq_etl_project_prod_spark.operators.modeling import (
         merge_frames,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_table,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-
-    def _publish(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its merge is already in the state
-        spark = batch_df.sparkSession
+    def _publish(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         source = batch_df
         if source_dedup_order:
             from pyspark.sql import Window
@@ -1150,7 +1031,7 @@ def stream_merge_into(
                 .drop("_rn")
             )
             source = keyed.unionByName(source.where(~non_null))
-        target = read_manifest_table(spark, root, layer, table)
+        target = read_manifest_table(batch_df.sparkSession, root, layer, table)
         merged = merge_frames(
             target,
             source,
@@ -1159,17 +1040,11 @@ def stream_merge_into(
             when_matched_delete=when_matched_delete,
             when_not_matched_insert=when_not_matched_insert,
         )
-        meta: dict = {marker: _batch_id}
-        commit_tables({table: merged}, root, layer, meta=meta)
+        commit_tables({table: merged}, root, layer, meta={marker: batch_id})
 
-    q = (
-        stream.writeStream.foreachBatch(_publish)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _publish), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def stream_incremental_near_dups(
@@ -1232,19 +1107,8 @@ def stream_incremental_near_dups(
     from novi_pdq_etl_project_prod_spark.plans.retract import (
         read_live_table,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its signatures and pairs are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         sigs_new = None
@@ -1264,7 +1128,7 @@ def stream_incremental_near_dups(
                 bands,
                 threshold,
             ).persist()  # emptiness check + write: ONE band-join pass
-            meta: dict = {marker: _batch_id}
+            meta: dict = {marker: batch_id}
             # APPEND-shaped commit (round 10, VERDICT r09 #1): only the
             # batch's signatures and pairs are written; the standing
             # corpus is referenced by the manifest as prior segments,
@@ -1298,14 +1162,9 @@ def stream_incremental_near_dups(
                 sigs_new.unpersist()
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 # moved to operators.dedup (round 11): the signature-table pair join
@@ -1349,19 +1208,8 @@ def stream_incremental_exact_dups(
     from novi_pdq_etl_project_prod_spark.plans.retract import (
         read_live_table,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its hashes and report are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
         h_new = (
             batch_df.select(
@@ -1431,7 +1279,7 @@ def stream_incremental_exact_dups(
             new_hashes = enriched.where(F.col("old_min").isNull()).select(
                 "h", F.col("new_min").alias("canonical_id")
             )
-            meta: dict = {marker: _batch_id}
+            meta: dict = {marker: batch_id}
             # EMPTY sides are dropped from the commit (ADVICE r10): an
             # all-duplicate batch appends no hashes, a clean batch no
             # report rows — committing zero-row segments every quiet
@@ -1460,14 +1308,9 @@ def stream_incremental_exact_dups(
                 enriched.unpersist()
             h_new.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def stream_incremental_repeated_spans(
@@ -1516,20 +1359,8 @@ def stream_incremental_repeated_spans(
     from novi_pdq_etl_project_prod_spark.operators.dedup import (
         incremental_repeated_spans_state,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_table,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its spans and grams are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
@@ -1606,20 +1437,15 @@ def stream_incremental_repeated_spans(
                     tables,
                     root,
                     layer,
-                    meta={marker: _batch_id},
+                    meta={marker: batch_id},
                     append_tables=tuple(tables),
                 )
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def stream_dsir_weights(
@@ -1682,25 +1508,13 @@ def stream_dsir_weights(
     from novi_pdq_etl_project_prod_spark.operators.text import (
         incremental_dsir_logweights,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        read_manifest_meta,
-        read_manifest_table,
-    )
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
     bucket_keys = {
         f"dsir_n_buckets:{t}": n_buckets
         for t in (target_counts_table, raw_counts_table)
     }
 
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its weights and deltas are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
@@ -1758,24 +1572,19 @@ def stream_dsir_weights(
                     tables,
                     root,
                     layer,
-                    meta={marker: _batch_id, **bucket_keys},
+                    meta={marker: batch_id, **bucket_keys},
                     append_tables=tuple(tables),
                 )
             _maybe_maintenance(
-                spark, root, layer, _batch_id,
+                spark, root, layer, batch_id,
                 maintenance_every, maintenance_kwargs,
             )
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def _maybe_maintenance(
@@ -1842,17 +1651,8 @@ def stream_bm25_index(
     from novi_pdq_etl_project_prod_spark.operators.text import (
         build_bm25_index,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import commit_tables
 
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its postings are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         batch_df = batch_df.persist()
         try:
             with cache.scope():
@@ -1871,24 +1671,19 @@ def stream_bm25_index(
                     tables,
                     root,
                     layer,
-                    meta={marker: _batch_id},
+                    meta={marker: batch_id},
                     append_tables=tuple(tables),
                 )
             _maybe_maintenance(
-                batch_df.sparkSession, root, layer, _batch_id,
+                batch_df.sparkSession, root, layer, batch_id,
                 maintenance_every, maintenance_kwargs,
             )
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()
 
 
 def stream_retractions(
@@ -1938,26 +1733,12 @@ def stream_retractions(
         dsir_negative_deltas,
         retract_ids,
     )
-    from novi_pdq_etl_project_prod_spark.sources.layers import (
-        commit_tables,
-        current_manifest_version,
-        read_manifest,
-        read_manifest_meta,
-        read_manifest_table,
-    )
 
     tomb_table = tombstones_table or TOMBSTONES_TABLE
-    marker = batch_marker_key(checkpoint_dir)
-    _maybe_migrate_legacy(root, layer, checkpoint_dir)
-    counts_key = f"retraction_counts:{marker}"
 
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = _last_applied_batch(root, layer, marker)
-        if last is not None and _batch_id <= last:
-            return  # replayed batch: its tombstones/deltas are in
+    def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
+        counts_key = f"retraction_counts:{marker}"
         # CAS pin (round-12 second review): the doc-level anti-join
         # below is only race-proof if the commit conflicts when ANY
         # writer lands between the tombstone read and the flip — a
@@ -1999,24 +1780,19 @@ def stream_retractions(
                     layer,
                     expected_base=base,
                     meta={
-                        marker: _batch_id,
+                        marker: batch_id,
                         counts_key: total,
                         **bucket_keys,
                     },
                     append_tables=tuple(dfs),
                 )
             _maybe_maintenance(
-                spark, root, layer, _batch_id,
+                spark, root, layer, batch_id,
                 maintenance_every, maintenance_kwargs,
             )
         finally:
             drop.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir
     )
-    q.awaitTermination()

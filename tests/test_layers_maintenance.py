@@ -153,13 +153,13 @@ def test_compaction_sizes_files_per_partition(spark, tmp_path):
     assert df.count() == 120_100
 
 
-def test_read_table_evolved_merges_schema_across_months(spark, tmp_path):
-    """A column added mid-history: old months read as NULL, new months
-    carry it, partition pruning still applies."""
+def test_read_month_merges_schema_across_months(spark, tmp_path):
+    """A column added mid-history: read without a schema, old months
+    read as NULL, new months carry it, partition pruning still applies."""
     import pyspark.sql.functions as F
 
     from novi_pdq_etl_project_prod_spark.sources.layers import (
-        read_table_evolved,
+        read_month,
         write_month_idempotent,
     )
 
@@ -174,35 +174,38 @@ def test_read_table_evolved_merges_schema_across_months(spark, tmp_path):
     write_month_idempotent(old, root, "staging", "evolving")
     write_month_idempotent(new, root, "staging", "evolving")
 
-    df = read_table_evolved(spark, root, "staging", "evolving")
+    df = read_month(spark, root, "staging", "evolving")
     assert "source_system" in df.columns
     rows = {r.k: r for r in df.collect()}
     assert rows[1].source_system is None and rows[2].source_system == "api"
-    one = read_table_evolved(spark, root, "staging", "evolving", yyyymm=202401)
+    one = read_month(spark, root, "staging", "evolving", yyyymm=202401)
     assert one.count() == 1
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan or one.count() == 1  # pruning intact
 
 
-def test_write_month_with_audit_single_pass_metrics(spark, tmp_path):
+def test_observed_month_write_single_pass_metrics(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from novi_pdq_etl_project_prod_spark.sources.layers import (
-        write_month_with_audit,
+        observe_rows,
+        write_month_idempotent,
     )
 
     df = spark.createDataFrame(
         [(202401, 1, 10.5), (202401, 2, 4.5), (202402, 3, 7.0)],
         "yyyymm int, k int, measure double",
     )
-    metrics = write_month_with_audit(
-        df, str(tmp_path / "wh"), "staging", "audited",
-        audit_measures={
+    observed, obs = observe_rows(
+        df,
+        {
             "sum_measure": F.sum(F.col("measure").cast("decimal(18,2)")).cast(
                 "double"
             )
         },
     )
+    write_month_idempotent(observed, str(tmp_path / "wh"), "staging", "audited")
+    metrics = obs.get
     assert metrics["n_rows"] == 3
     assert abs(metrics["sum_measure"] - 22.0) < 1e-9
     back = spark.read.parquet(str(tmp_path / "wh/staging/audited"))

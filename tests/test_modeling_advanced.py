@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from novi_pdq_etl_project_prod_spark.operators.modeling import (
-    merge_into_snapshot,
+    merge_frames,
     scd2_apply,
 )
 
@@ -25,12 +25,12 @@ def test_merge_update_insert_delete(spark):
         [(2, "B", 99), (3, "c", -1), (4, "d", 40)],
         "id int, name string, v int",
     )
-    out = merge_into_snapshot(
+    out = merge_frames(
         target,
         source,
-        pk=("id",),
-        update_cols=("name", "v"),
-        delete_condition=F.col("v") < 0,
+        on=("id",),
+        when_matched_update={"name": "s.name", "v": "s.v"},
+        when_matched_delete="s.v < 0",
     )
     got = {(r.id, r.name, r.v) for r in out.collect()}
     # 1 untouched, 2 updated, 3 deleted (matched + v<0), 4 inserted
@@ -39,7 +39,7 @@ def test_merge_update_insert_delete(spark):
 
 def test_merge_without_existing_is_insert_all(spark):
     source = _df(spark, [(1, "a", 1)], "id int, name string, v int")
-    out = merge_into_snapshot(None, source, pk=("id",))
+    out = merge_frames(None, source, on=("id",))
     assert out.count() == 1
 
 

@@ -326,7 +326,7 @@ def test_ivf_index_search_matches_inline_ivf(spark, tmp_path):
         ivf_topk,
     )
     from novi_pdq_etl_project_prod_spark.session import read_table
-    from novi_pdq_etl_project_prod_spark.sources.layers import list_snapshots
+    from novi_pdq_etl_project_prod_spark.sources.layers import snapshot_history
 
     emb = read_table(spark, SF_ORACLE, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
@@ -349,9 +349,7 @@ def test_ivf_index_search_matches_inline_ivf(spark, tmp_path):
     again = ivf_index_topk(spark, root, queries, k=5, nprobe=3)
     c = sorted(((r.query_id, r.rank, r.neighbor_id) for r in again.collect()))
     assert c == a
-    import os
-    vec_table_dir = os.path.join(root, "curated", "ann_vectors")
-    assert len(list_snapshots(vec_table_dir)) >= 2
+    assert len(snapshot_history(root, "curated", "ann_vectors")) >= 2
 
 
 # ---------------------------------------------------------------------------

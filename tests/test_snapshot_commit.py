@@ -263,30 +263,31 @@ def test_upsert_read_modify_write_needs_no_checkpoint(spark, tmp_path):
 
 def test_time_travel_reads_retained_versions(spark, tmp_path):
     from novi_pdq_etl_project_prod_spark.sources.layers import (
-        list_snapshots,
+        SnapshotNotFoundError,
         overwrite_snapshot,
-        read_table_at_version,
-        table_path,
+        read_snapshot_as_of,
+        snapshot_history,
     )
 
     root = str(tmp_path)
     for i in (1, 2, 3):
         df = spark.range(i * 10).selectExpr("id", f"{i} AS gen")
         overwrite_snapshot(df, root, "curated", "tt")
-    path = table_path(root, "curated", "tt")
-    hist = list_snapshots(path)
+    hist = snapshot_history(root, "curated", "tt")
     # GC retains the live snapshot + GC_RETAIN_PREVIOUS (+ grace-window
-    # entries, which covers all three in a fast test run)
-    assert hist[-1]["is_live"] and hist == sorted(hist, key=lambda s: s["version"])
-    live = read_table_at_version(spark, path, hist[-1]["version"])
+    # entries, which covers all three in a fast test run); newest first
+    assert hist[0]["is_live"] and hist == sorted(
+        hist, key=lambda s: s["version"], reverse=True
+    )
+    live = read_snapshot_as_of(spark, root, "curated", "tt", hist[0]["version"])
     assert live.count() == 30 and live.agg({"gen": "max"}).first()[0] == 3
-    prev = read_table_at_version(spark, path, hist[-2]["version"])
+    prev = read_snapshot_as_of(spark, root, "curated", "tt", hist[1]["version"])
     assert prev.count() == 20 and prev.agg({"gen": "max"}).first()[0] == 2
-    # a never-existing version names the retained history in its error
+    # a never-existing version is reported as not retained
     import pytest as _pytest
 
-    with _pytest.raises(FileNotFoundError, match="retained"):
-        read_table_at_version(spark, path, 99)
+    with _pytest.raises(SnapshotNotFoundError, match="retained"):
+        read_snapshot_as_of(spark, root, "curated", "tt", "_snap_v00000099")
 
 
 # ---------------------------------------------------------------------------

@@ -254,6 +254,48 @@ def test_stream_upsert_dim_latest_wins_across_batches(spark, tmp_path):
     assert snap == {1: "alice", 2: "bobby", 3: "carol"}
 
 
+@pytest.mark.parametrize("sink", ["stream_upsert_dim", "stream_kmv_sketch"])
+def test_fold_sink_fails_on_unreadable_snapshot(spark, tmp_path, sink):
+    """A snapshot-fold sink whose live snapshot cannot be read fails the
+    batch and leaves ``_CURRENT`` alone; it must not recommit the table
+    holding only the new batch's rows."""
+    from pyspark.errors import StreamingQueryException
+
+    from novi_pdq_etl_project_prod_spark.sources.layers import (
+        current_snapshot,
+        table_path,
+    )
+    from novi_pdq_etl_project_prod_spark.streaming import events
+
+    schema = "id int, name string, ver int"
+    src, root = str(tmp_path / "updates"), str(tmp_path / "wh")
+
+    def land(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        chk = str(tmp_path / "chk")
+        if sink == "stream_upsert_dim":
+            events.stream_upsert_dim(
+                stream, root, "t", pk=("id",), order_col="ver",
+                checkpoint_dir=chk,
+            )
+        else:
+            events.stream_kmv_sketch(
+                stream, root, "t", "name", ("ver",), checkpoint_dir=chk
+            )
+
+    land([(1, "alice", 1), (2, "bob", 1)])
+    path = table_path(root, "curated", "t")
+    live = current_snapshot(path)
+    assert live is not None
+    shutil.rmtree(os.path.join(path, live))
+    with pytest.raises(StreamingQueryException, match="PATH_NOT_FOUND"):
+        land([(3, "carol", 2)])
+    assert current_snapshot(path) == live
+
+
 def test_stream_static_enrichment_matches_batch(spark, events_dir):
     from novi_pdq_etl_project_prod_spark.streaming.events import (
         enrich_stream_with_dim,

@@ -18,8 +18,10 @@ Usage:
   warmup at sf0.01 per query, then 3 timed noop-sink runs; the MEDIAN is
   the judged number. Session state (caches, checkpoints) is cleared
   between runs exactly like bench.py methodology 3.
-- Results merge into BENCH_SCALED_r15.json keyed by tag → cpus → query,
-  so before/after pairs for the same box live in one committed artifact.
+- Results merge into bench_scaled.json beside the replica (in
+  $SPARK_GRAFT_SCALED_DIR) keyed by tag → cpus → query, so before/after
+  pairs for the same box live in one file; the path is printed. The
+  committed BENCH_SCALED_r15.json is the r15 board and is never written.
 
 Timings must not overlap other Spark workloads — this tool serializes
 everything it runs and should be the only job on the box while timing.
@@ -38,7 +40,7 @@ REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
 SCALED_DIR = os.environ.get("SPARK_GRAFT_SCALED_DIR", "/tmp/sf_x10_bench")
-OUT_PATH = os.path.join(REPO, "BENCH_SCALED_r15.json")
+OUT_PATH = os.path.join(SCALED_DIR, "bench_scaled.json")
 WARMUP_SF = "/root/testdata/sf0.01"
 K = 10
 
