@@ -66,6 +66,11 @@ def upsert_dim(
     ``model_curated.py:72-101``) becomes: stack old+new with a precedence
     flag, keep the highest-precedence row per key. The result is the new
     dim snapshot; persist it with ``sources.layers.overwrite_snapshot``.
+
+    Among several incoming rows of one key the survivor is
+    :func:`dedup_dim`'s default one (non-key columns descending, nulls
+    last), so one window both dedups ``incoming`` and upserts it; a
+    caller that keeps dedup's null-key drop filters those rows first.
     """
     incoming = incoming.withColumn("__is_new", F.lit(1))
     if existing is None:
@@ -74,7 +79,14 @@ def upsert_dim(
         stacked = incoming.unionByName(
             existing.withColumn("__is_new", F.lit(0)), allowMissingColumns=True
         )
-    w = Window.partitionBy(*[F.col(k) for k in pk]).orderBy(F.col("__is_new").desc())
+    survivor = [
+        F.col(c).desc_nulls_last()
+        for c in stacked.columns
+        if c not in pk and c != "__is_new"
+    ]
+    w = Window.partitionBy(*[F.col(k) for k in pk]).orderBy(
+        F.col("__is_new").desc(), *survivor
+    )
     return (
         stacked.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)

@@ -15,7 +15,7 @@ Differences from the reference, by design:
 - raw layer is partitioned parquet of (yyyymm, raw JSON, ingested_at) —
   JSONB → ``to_json``/``from_json`` (S4/P1);
 - delete-month idempotency → dynamic partition overwrite (S7);
-- dim upsert ON CONFLICT → latest-wins dedup + snapshot overwrite (S9);
+- dim upsert ON CONFLICT → one latest-wins window + snapshot overwrite (S9);
 - the transforms and DQ checks run from the same library operators the
   query catalog exposes, so the oracle harness covers their semantics.
 
@@ -27,6 +27,15 @@ fact month — so no job re-counts what a write already saw. Only
 re-read of a just-written table passes the schema the pipeline wrote
 (``read_month(..., schema=...)``): Spark then skips Parquet schema
 inference, which would otherwise cost one footer-reading job per read.
+
+Work done once, not per table: ``read_dsv`` scrubs the null tokens and
+the raw encode does not scrub again; each dim is one ``upsert_dim``
+window (latest month wins, then ``dedup_dim``'s survivor among the
+month's rows) instead of a dedup window followed by an upsert window;
+the non-negative gate runs over both facts' measures stacked, and the
+unique-grain gate over both facts' grains stacked as (fact, key as
+string, yyyymm) — one action per gate. A warm fixture month runs 27
+Spark jobs.
 """
 
 from __future__ import annotations
@@ -39,7 +48,6 @@ from pyspark.sql.types import StructType
 
 from novi_pdq_etl_project_prod_spark import cache
 from novi_pdq_etl_project_prod_spark.operators.modeling import (
-    dedup_dim,
     project_fact,
     upsert_dim,
 )
@@ -103,7 +111,9 @@ def _extract_to_raw(
         & (F.col("yyyymm") >= F.lit(YYYYMM_FLOOR))
         & (F.col("yyyymm") == F.lit(yyyymm))
     )
-    raw = encode_raw_json(df)
+    # read_dsv has scrubbed every payload column already; the scrub is
+    # idempotent, so a second pass would only cost plan and codegen
+    raw = encode_raw_json(df, scrub_null_tokens=False)
     write_month_idempotent(raw, root, "raw", table)
     return raw.schema
 
@@ -131,6 +141,15 @@ def _transform(
     return staged, rows
 
 
+def _grain(fact: DataFrame, name: str, key: str) -> DataFrame:
+    """A fact's grain columns as (fact, key as string, yyyymm)."""
+    return fact.select(
+        F.lit(name).alias("fact"),
+        F.col(key).cast("string").alias("key"),
+        F.col("yyyymm"),
+    )
+
+
 def run_monthly_pipeline(
     spark: SparkSession,
     operator_dsv: str,
@@ -155,22 +174,21 @@ def run_monthly_pipeline(
         yyyymm, lease_raw,
     )
 
-    # model curated: dims (dedup + upsert) and facts (month overwrite)
+    # model curated: each dim is one window over this month's rows
+    # (null keys dropped) stacked on the live snapshot — upsert_dim keeps
+    # the newest row per key and, among this month's, dedup_dim's survivor
     dims = {
-        "dim_operator": dedup_dim(
-            op.select("operator_no", "operator_name"), pk=("operator_no",)
-        ),
-        "dim_district": dedup_dim(lease.select("district_no"), pk=("district_no",)),
-        "dim_field": dedup_dim(lease.select("field_no"), pk=("field_no",)),
-        "dim_lease": dedup_dim(
+        "dim_operator": (op.select("operator_no", "operator_name"), ("operator_no",)),
+        "dim_district": (lease.select("district_no"), ("district_no",)),
+        "dim_field": (lease.select("field_no"), ("field_no",)),
+        "dim_lease": (
             lease.select("lease_key", "district_no", "lease_no", "lease_name"),
-            pk=("lease_key",),
+            ("lease_key",),
         ),
     }
     dim_counts = {}
-    for name, new in dims.items():
-        pk = {"dim_operator": ("operator_no",), "dim_district": ("district_no",),
-              "dim_field": ("field_no",), "dim_lease": ("lease_key",)}[name]
+    for name, (new, pk) in dims.items():
+        new = new.na.drop(subset=list(pk))
         # a dim with no live snapshot is new; one whose snapshot cannot
         # be read fails here instead of restarting from this month alone
         existing = None
@@ -199,10 +217,17 @@ def run_monthly_pipeline(
     f_lease = read_month(
         spark, root, "curated", "fact_lease_monthly", yyyymm, schema=fact_lease.schema
     )
-    assert_non_negative(f_op, MEASURES)
-    assert_non_negative(f_lease, MEASURES)
-    assert_unique_grain(f_op, ("operator_no", "yyyymm"))
-    assert_unique_grain(f_lease, ("lease_key", "yyyymm"))
+    # one action per gate over both facts stacked; the fact name keeps
+    # an operator key and a lease key that print alike apart
+    assert_non_negative(
+        f_op.select(*MEASURES).unionByName(f_lease.select(*MEASURES)), MEASURES
+    )
+    assert_unique_grain(
+        _grain(f_op, "fact_operator_monthly", "operator_no").unionByName(
+            _grain(f_lease, "fact_lease_monthly", "lease_key")
+        ),
+        ("fact", "key", "yyyymm"),
+    )
     mismatches = rollup_reconciliation_suite(
         f_op, f_lease, keys=("operator_no",), measures=MEASURES
     )

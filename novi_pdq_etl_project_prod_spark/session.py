@@ -77,6 +77,18 @@ def get_spark(
         # on every class of every month); at 1000 it compiles 21
         # (CodegenMetrics compile count, perfbench pdq_monthly feed)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # no Python call-site capture: with it on (the default), every
+        # Column/functions call also runs getActiveSession, a conf read
+        # and PySparkCurrentOrigin.set/clear over py4j. Turning it off
+        # alone took one warm fixture month of run_monthly_pipeline from
+        # 5,935 py4j calls to 2,410, and a perfbench star_queries pass
+        # from 1,610 to 570. What is
+        # given up: the Python file and line in the DataFrame query
+        # context of a runtime error; the SQL-text context stays. It is
+        # set here, at session build, because PySpark reads the flag
+        # once per process (pyspark.errors.utils.is_debugging_enabled
+        # caches it) and ignores a later spark.conf.set.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", "8g")
     )
     if master:

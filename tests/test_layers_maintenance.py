@@ -677,10 +677,12 @@ def test_run_maintenance_tick_composes_policies(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(layers, "GC_GRACE_SECONDS", 0.0)
     monkeypatch.setattr(layers, "GC_RETAIN_PREVIOUS", 0)
     root = str(tmp_path)
-    # manifest table "a": 4 segments (over threshold); "b": 2 (under)
+    # manifest table "a": 4 segments (over threshold); "b": 2 (under).
+    # Each segment of "a" is one file of consecutive ids, whatever the
+    # session width.
     for i in range(4):
         layers.commit_tables(
-            {"a": spark.range(5 * i, 5 * i + 5)},
+            {"a": spark.range(5 * i, 5 * i + 5, numPartitions=1)},
             root, "curated", append_tables=("a",),
         )
     for i in range(2):
@@ -698,13 +700,22 @@ def test_run_maintenance_tick_composes_policies(spark, tmp_path, monkeypatch):
         "overwrite"
     ).parquet(layers.table_path(root, "curated", "zt"))
 
-    report = run_maintenance_tick(
-        spark, root, "curated",
-        zorder_cols={"zt": ["x", "y"], "a": ["id", "id"]},
-        max_segments=3,
-        vacuum_retain=0,
-        vacuum_grace_seconds=0.0,
-    )
+    # The compaction's scan packs files into splits sized from the
+    # session width (at 2 CPUs, two segments per split, paired in the
+    # order Spark lists their dirs, so its files can span interleaved id
+    # ranges and the audit rightly fires). Fixing the split count at 4
+    # keeps one segment per compacted file at any width.
+    spark.conf.set("spark.sql.files.minPartitionNum", "4")
+    try:
+        report = run_maintenance_tick(
+            spark, root, "curated",
+            zorder_cols={"zt": ["x", "y"], "a": ["id", "id"]},
+            max_segments=3,
+            vacuum_retain=0,
+            vacuum_grace_seconds=0.0,
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
     assert report["compact"]["a"]["fired"] is True
     assert report["compact"]["a"]["segment_count_after"] == 1
     assert report["compact"]["b"]["fired"] is False

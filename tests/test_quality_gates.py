@@ -11,7 +11,10 @@ from novi_pdq_etl_project_prod_spark.operators.quality import (
     assert_non_negative,
     assert_unique_grain,
 )
-from novi_pdq_etl_project_prod_spark.plans.pipeline import run_backfill
+from novi_pdq_etl_project_prod_spark.plans.pipeline import (
+    run_backfill,
+    run_monthly_pipeline,
+)
 from tests.test_reference_pipeline import LEASE_DSV, OPERATOR_DSV
 
 
@@ -48,6 +51,31 @@ def test_backfill_runs_month_list(spark, tmp_path):
         202401,
         202402,
     }
+
+
+def _month_fails(spark, tmp_path, operator_dsv, lease_dsv, match):
+    op, lease = tmp_path / "op.dsv", tmp_path / "lease.dsv"
+    op.write_text(operator_dsv)
+    lease.write_text(lease_dsv)
+    with pytest.raises(DataQualityError, match=match):
+        run_monthly_pipeline(
+            spark, str(op), str(lease), str(tmp_path / "wh"), 202401
+        )
+
+
+def test_pipeline_gate_catches_duplicate_operator_row(spark, tmp_path):
+    """The unique-grain gate runs once over both facts; a repeated
+    operator row must still fail the month."""
+    row = next(line for line in OPERATOR_DSV.splitlines() if line.startswith("101}"))
+    _month_fails(spark, tmp_path, OPERATOR_DSV + row + "\n", LEASE_DSV, "duplicate")
+
+
+def test_pipeline_gate_catches_negative_lease_volume(spark, tmp_path):
+    """The non-negative gate runs once over both facts' measures; one
+    negative lease volume must still fail the month."""
+    lease = LEASE_DSV.replace("}30.25}null}", "}-30.25}null}")
+    assert lease != LEASE_DSV
+    _month_fails(spark, tmp_path, OPERATOR_DSV, lease, "negative")
 
 
 def test_approx_count_distinct_error_bound(spark):
