@@ -542,62 +542,27 @@ def m60_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token-grain exchanges whose shuffle volume grew with corpus TEXT
     # (×10 sweep ratio 5.4, the worst superlinear untouched query).
     # Only the frequent-occurrence START positions shuffle now (span
-    # metadata), MERGED into disjoint [s, e] intervals first with the
-    # gaps-and-islands window repeated_spans uses (boilerplate starts
-    # overlap heavily — an unmerged exists() over raw starts was
-    # measured 7% SLOWER than the old shape; over merged intervals the
-    # per-token membership scan is a handful of comparisons). The
-    # excision and reassembly run row-locally with indexed
-    # filter/transform, so order is positional by construction (no
-    # sort, no collect_list, no token-grain join).
-    from pyspark.sql import Window
-
-    hits = occ.join(F.broadcast(frequent), "g").select("doc_id", "start")
-    w = Window.partitionBy("doc_id").orderBy("start")
-    prev_max_e = F.max(F.col("start") + 2).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
+    # metadata), MERGED into disjoint intervals first by
+    # operators.dedup._merge_islands (boilerplate starts overlap
+    # heavily — an unmerged exists() over raw starts was measured 7%
+    # SLOWER than the old shape). The excision and reassembly then run
+    # row-locally through operators.dedup._excise_spans, so order is
+    # positional by construction (no sort, no collect_list, no
+    # token-grain join).
+    from novi_pdq_etl_project_prod_spark.operators.dedup import (
+        _excise_spans,
+        _merge_islands,
     )
-    islands = hits.withColumn(
-        "__brk",
-        F.when(F.col("start") > F.coalesce(prev_max_e, F.lit(-1)), 1).otherwise(0),
-    ).withColumn(
-        "__isl",
-        F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+
+    hits = occ.join(F.broadcast(frequent), "g").select(
+        "doc_id", F.col("start").alias("s"), (F.col("start") + 3).alias("e")
     )
     spans = (
-        islands.groupBy("doc_id", "__isl")
-        .agg(
-            F.min("start").alias("s"),
-            (F.max("start") + 2).alias("e"),
-        )
+        _merge_islands(hits)
         .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("s", "e")).alias("__sp"))
+        .agg(F.collect_list(F.struct("span_start", "span_end")).alias("__sp"))
     )
-    # gap-slice assembly (same move as excise_repeated_spans r15): the
-    # merged spans are sorted disjoint [s, e]-inclusive intervals, so
-    # the kept text is the concatenation of inter-span gaps — JVM
-    # slice+concat per span instead of an interpreted exists() per token
-    sp = F.coalesce(
-        F.col("__sp"), F.array().cast("array<struct<s:int,e:int>>")
-    )
-    kept_arr = F.aggregate(
-        F.array_sort(sp),
-        F.struct(
-            F.lit(0).alias("prev"),
-            F.array().cast("array<string>").alias("acc"),
-        ),
-        lambda st, x: F.struct(
-            x["e"].alias("prev"),
-            F.concat(
-                st["acc"],
-                F.slice(F.col("t"), st["prev"] + 1, x["s"] - st["prev"] - 1),
-            ).alias("acc"),
-        ),
-        lambda st: F.concat(
-            st["acc"],
-            F.slice(F.col("t"), st["prev"] + 1, F.size("t") - st["prev"]),
-        ),
-    )
+    kept_arr = _excise_spans(F.col("t"), F.col("__sp"))
     return (
         base.join(spans, "doc_id", "left")
         .withColumn("__kept", kept_arr)

@@ -45,6 +45,7 @@ from novi_pdq_etl_project_prod_spark import cache
 from novi_pdq_etl_project_prod_spark.operators.text import (
     document_fingerprint,
     shingles,
+    tokens,
 )
 
 
@@ -1426,9 +1427,7 @@ def incremental_pairs_from_signatures(
     # so this doesn't cost a job at all (optimization r14: each extra
     # action is a full plan-and-schedule round trip on the driver).
     n_banded = (sig_new.count() if n_new is None else n_new) * max(bands, 1)
-    a = (
-        F.broadcast(bn) if n_banded <= BROADCAST_HINT_MAX_ROWS else bn
-    ).alias("a")
+    a = broadcast_if_bounded(bn, n_banded).alias("a")
     b = ball.alias("b")
     cand = (
         a.join(
@@ -1479,6 +1478,106 @@ def incremental_pairs_from_signatures(
     )
 
 
+def _kgram_hashes(t: Column, k: int) -> Column:
+    """The md5 hex hash of every ``k``-token window of the token array
+    ``t``, in position order: element ``i`` (1-based) hashes tokens
+    ``i .. i+k-1`` joined by single spaces. O(n·k) JVM array slices —
+    never ``element_at`` per index, the O(n²) trap.
+
+    ``sequence(1, size - k + 1)`` counts DOWN for a doc shorter than
+    ``k``, so every caller guards short docs itself. Pass a tokens
+    column already materialized in its own projection (see
+    ``text.ngram_novelty``): the interpreted lambda then slices a
+    computed array instead of re-running the split per position."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(t) - F.lit(k - 1)),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(t, i, k))),
+    )
+
+
+def _gram_positions(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """The positional gram frame ``(doc_id, s, gh)``: one row per
+    k-gram of every doc with at least ``k`` tokens, ``s`` its 1-based
+    start token."""
+    base = df.select(
+        F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")
+    ).where(F.size("t") >= k)
+    return base.select(
+        "doc_id",
+        F.posexplode(_kgram_hashes(F.col("t"), k)).alias("pos0", "gh"),
+    ).select("doc_id", (F.col("pos0") + 1).alias("s"), "gh")
+
+
+def _merge_islands(marks: DataFrame) -> DataFrame:
+    """Merge per-doc intervals ``(doc_id, s, e)`` (``e`` exclusive, ``s``
+    unique per doc) into maximal spans ``(doc_id, span_start, span_end,
+    span_tokens)``: overlapping and touching intervals join one span.
+
+    Gaps-and-islands in a window PARTITIONED BY DOC, so state is bounded
+    by document length, never corpus length: ordered by start, a mark
+    opens a new island iff it starts past the running max end."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("doc_id").orderBy("s")
+    prev_max_e = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    flagged = marks.withColumn(
+        "brk",
+        F.when(F.col("s") > F.coalesce(prev_max_e, F.lit(-1)), 1).otherwise(0),
+    ).withColumn(
+        "isl", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    return (
+        flagged.groupBy("doc_id", "isl")
+        .agg(F.min("s").alias("span_start"), F.max("e").alias("span_end"))
+        .select(
+            "doc_id",
+            "span_start",
+            "span_end",
+            (F.col("span_end") - F.col("span_start"))
+            .cast("long")
+            .alias("span_tokens"),
+        )
+    )
+
+
+def _excise_spans(t: Column, spans: Column) -> Column:
+    """The tokens of ``t`` that no span in ``spans`` covers, in order.
+    ``spans`` is an ``array<struct<span_start:int,span_end:int>>`` of
+    disjoint 1-based intervals, end exclusive (NULL = no spans), as
+    :func:`_merge_islands` yields them.
+
+    Gap-slice assembly (optimization r15): the kept text is exactly the
+    concatenation of the inter-span gaps — one aggregate over the (few)
+    sorted spans whose step is a JVM array slice+concat, O(tokens +
+    spans·copy), instead of a per-token indexed filter with an exists()
+    lambda per position (interpreted, O(tokens × spans)). The gap
+    before span x is [prev+1, span_start-1] with prev = previous
+    span_end − 1 (the last covered position), and slice() with length 0
+    at touching spans yields the empty gap exactly."""
+    sp = F.coalesce(
+        spans, F.array().cast("array<struct<span_start:int,span_end:int>>")
+    )
+    return F.aggregate(
+        F.array_sort(sp),
+        F.struct(
+            F.lit(0).alias("prev"),
+            F.array().cast("array<string>").alias("acc"),
+        ),
+        lambda st, x: F.struct(
+            (x["span_end"] - 1).alias("prev"),
+            F.concat(
+                st["acc"],
+                F.slice(t, st["prev"] + 1, x["span_start"] - st["prev"] - 1),
+            ).alias("acc"),
+        ),
+        lambda st: F.concat(
+            st["acc"], F.slice(t, st["prev"] + 1, F.size(t) - st["prev"])
+        ),
+    )
+
+
 def repeated_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1517,29 +1616,12 @@ def repeated_spans(
     Output: (doc_id, span_start, span_end, span_tokens) — 1-based token
     indices, end exclusive, ordered within doc; ``span_tokens ≥ k``.
     """
-    from pyspark.sql import Window
-
-    from novi_pdq_etl_project_prod_spark.operators.text import tokens
-
-    base = df.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")
-    ).where(F.size("t") >= k)
-    n_g = F.size("t") - F.lit(k - 1)
-    grams = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), n_g),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("t"), i, k))),
-            )
-        ).alias("pos0", "gh"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("s"), "gh")
     # The gram pass is the dominant cost (O(n·k) slice-concat + md5 per
     # token position) and BOTH the repeat filter and the mark join read
     # it — unpersisted, the plan ran the whole generation twice
     # (optimization r15; two Generate nodes in the r14 plan). One lazy
     # persist: the filter side fills it, the mark side reads blocks.
-    grams = cache.track(grams)
+    grams = cache.track(_gram_positions(df, id_col, text_col, k))
     rep = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1549,35 +1631,7 @@ def repeated_spans(
     marks = grams.join(rep, "gh").select(
         "doc_id", "s", (F.col("s") + k).alias("e")
     )
-    # gaps-and-islands: a window ordered by start per doc; a mark opens
-    # a new island iff it starts past the running max end (s unique per
-    # doc -> deterministic ordering)
-    w = Window.partitionBy("doc_id").orderBy("s")
-    prev_max_e = F.max("e").over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = marks.withColumn(
-        "brk",
-        F.when(F.col("s") > F.coalesce(prev_max_e, F.lit(-1)), 1).otherwise(0),
-    ).withColumn(
-        "isl",
-        F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return (
-        flagged.groupBy("doc_id", "isl")
-        .agg(
-            F.min("s").alias("span_start"),
-            F.max("e").alias("span_end"),
-        )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start"))
-            .cast("long")
-            .alias("span_tokens"),
-        )
-    )
+    return _merge_islands(marks)
 
 
 def excise_repeated_spans(
@@ -1600,8 +1654,6 @@ def excise_repeated_spans(
     (0, 0, "") rather than silently vanishing — a pipeline replacing
     its corpus with the excised output must not delete rows.
     """
-    from novi_pdq_etl_project_prod_spark.operators.text import tokens
-
     spans = repeated_spans(df, id_col, text_col, k, min_count)
     # Row-local rebuild (optimization r14, guide §2.3 — shuffle the span
     # METADATA, never the tokens): spans are merged non-overlapping
@@ -1618,42 +1670,7 @@ def excise_repeated_spans(
     base = df.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")
     )
-    sp = F.coalesce(F.col("__sp"), F.array().cast(
-        "array<struct<span_start:int,span_end:int>>"
-    ))
-    # Gap-slice assembly (optimization r15): the spans are sorted,
-    # disjoint intervals, so the kept text is exactly the concatenation
-    # of the inter-span gaps — one aggregate over the (few) spans whose
-    # step is a JVM array slice+concat, O(tokens + spans·copy) instead
-    # of the previous per-token indexed filter with an exists() lambda
-    # per position (interpreted, O(tokens × spans), and it built a
-    # (pos, tok) struct per token besides). span_start is 1-based
-    # inclusive, span_end exclusive: the gap before span x is
-    # [prev+1, span_start-1] with prev = previous span_end − 1 (the
-    # last covered position), and slice() with length 0 at touching
-    # spans yields the empty gap exactly.
-    kept = F.aggregate(
-        F.array_sort(sp),
-        F.struct(
-            F.lit(0).alias("prev"),
-            F.array().cast("array<string>").alias("acc"),
-        ),
-        lambda st, x: F.struct(
-            (x["span_end"] - 1).alias("prev"),
-            F.concat(
-                st["acc"],
-                F.slice(
-                    F.col("t"),
-                    st["prev"] + 1,
-                    x["span_start"] - st["prev"] - 1,
-                ),
-            ).alias("acc"),
-        ),
-        lambda st: F.concat(
-            st["acc"],
-            F.slice(F.col("t"), st["prev"] + 1, F.size("t") - st["prev"]),
-        ),
-    )
+    kept = _excise_spans(F.col("t"), F.col("__sp"))
     return (
         base.join(spans_per_doc, "doc_id", "left")
         .select(
@@ -1695,6 +1712,58 @@ def broadcast_if_bounded(df: DataFrame, n_rows: int):
     return F.broadcast(df) if n_rows <= BROADCAST_HINT_MAX_ROWS else df
 
 
+def _exact_hash_stage(
+    h_new: DataFrame, standing: DataFrame | None, n_hashes: int
+) -> tuple[DataFrame, DataFrame]:
+    """The trigger-side exact-dedup stage shared by the ingest funnel
+    and the streaming exact sink: ``h_new`` is the batch's (id, h)
+    content hashes, ``standing`` the (h, canonical_id) table or None
+    (first batch), ``n_hashes`` the batch's distinct-hash count (the
+    broadcast guard). Returns ``(report, new_hashes)``: the (doc_id,
+    dup_of, dup_type) report of :func:`incremental_exact_dups` and the
+    (h, canonical_id) rows of hashes not yet standing.
+
+    Scale shape: the batch hashes are broadcast against ONE map-side
+    scan of the standing table (matched hashes and their canonical ids
+    come back candidate-sized); the standing table is never shuffled.
+    The candidate-sized ``enriched`` frame is tracked so the report,
+    the new-hash rows and their emptiness checks reuse one standing
+    scan. The persist is lazy: its first consumer is a broadcast build,
+    a single driver-side collect, so the fill cannot race, and an eager
+    fill would cost one more serial job per batch."""
+    bc = lambda d: broadcast_if_bounded(d, n_hashes)  # noqa: E731
+    new_min = h_new.groupBy("h").agg(F.min("id").alias("new_min"))
+    if standing is None:
+        # derive an EMPTY matched frame from the batch itself so
+        # old_min's type always equals the caller's id type
+        matched = new_min.select("h", F.col("new_min").alias("old_min")).limit(0)
+    else:
+        matched = (
+            standing.join(bc(h_new.select("h").distinct()), "h")
+            .groupBy("h")
+            .agg(F.min("canonical_id").alias("old_min"))
+        )
+    enriched = cache.track(new_min.join(bc(matched), "h", "left"))
+    report = (
+        h_new.join(bc(enriched), "h")
+        .where(
+            F.col("old_min").isNotNull() | (F.col("id") > F.col("new_min"))
+        )
+        .select(
+            F.col("id").alias("doc_id"),
+            F.coalesce(F.col("old_min"), F.col("new_min")).alias("dup_of"),
+            F.when(F.col("old_min").isNotNull(), F.lit("exact_old"))
+            .otherwise(F.lit("exact_new"))
+            .alias("dup_type"),
+        )
+    )
+    # hashes already standing keep their canonical row untouched
+    new_hashes = enriched.where(F.col("old_min").isNull()).select(
+        "h", F.col("new_min").alias("canonical_id")
+    )
+    return report, new_hashes
+
+
 @dataclasses.dataclass(frozen=True)
 class GramProbe:
     """An EXISTENCE-PROBE view of a corpus' k-gram hashes: the wrapped
@@ -1732,23 +1801,12 @@ def gram_probe(
 
 
 def _gram_explode(df: DataFrame, text_col: str, k: int) -> DataFrame:
-    from novi_pdq_etl_project_prod_spark.operators.text import tokens
-
     base = df.select(tokens(text_col).alias("t")).where(F.size("t") >= k)
-    n_g = F.size("t") - F.lit(k - 1)
-    return base.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), n_g),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("t"), i, k))),
-            )
-        ).alias("gh")
-    )
+    return base.select(F.explode(_kgram_hashes(F.col("t"), k)).alias("gh"))
 
 
 def gram_set(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 50,
 ) -> DataFrame:
@@ -1790,20 +1848,11 @@ def doc_gram_set(
     row per (doc, distinct-gram) instead of per distinct gram — the
     same order for long-k grams, which are rarely shared across docs
     (sharing IS the repeat signal)."""
-    from novi_pdq_etl_project_prod_spark.operators.text import tokens
-
     base = df.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")
     ).where(F.size("t") >= k)
-    n_g = F.size("t") - F.lit(k - 1)
     return base.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), n_g),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("t"), i, k))),
-            )
-        ).alias("gh"),
+        "doc_id", F.explode(_kgram_hashes(F.col("t"), k)).alias("gh")
     ).distinct()
 
 
@@ -1829,9 +1878,49 @@ def incremental_repeated_spans_state(
     RETRACTABLE gram table (:func:`doc_gram_set` shape). It comes from
     the same cached gram explode as the spans, not a second tokenize
     pass (round-12 second review)."""
-    return _incremental_repeated_spans_impl(
-        new_df, standing_grams, id_col, text_col, k, attributed
+    # GramProbe (typed multiset) and true set tables are interchangeable
+    # HERE — the matched set below applies its own distinct; a persisted
+    # doc-attributed gram table (doc_gram_set) also reads fine, its gh
+    # column is all this probe touches
+    standing_grams = _gram_frame(standing_grams)
+    grams = _gram_positions(new_df, id_col, text_col, k)
+    if attributed:
+        # the positional gram frame feeds THREE consumers in attributed
+        # mode (counts, marks, doc_grams) — pin it so the explode runs
+        # once; batch-bounded rows
+        grams = cache.track(grams)
+    inc_counts = cache.track(
+        grams.groupBy("gh").agg(F.count(F.lit(1)).alias("c"))
     )
+    n_inc = inc_counts.count()  # fills the cache; also the hint guard
+    bc = lambda d: broadcast_if_bounded(d, n_inc)  # noqa: E731
+    if standing_grams is None:
+        matched = inc_counts.select("gh").limit(0)
+    else:
+        # ONE map-side pass over the standing gram set: broadcast the
+        # increment's distinct hashes, matched set comes back
+        # candidate-sized; the standing table is never shuffled. The
+        # distinct matters when standing_grams carries multiplicity
+        # (GramProbe callers, or a doc-attributed doc_gram_set table):
+        # a corpus-frequent gram must not inflate the frame that gets
+        # broadcast below.
+        matched = (
+            standing_grams.join(bc(inc_counts.select("gh")), "gh")
+            .select("gh")
+            .distinct()
+        )
+    flagged = inc_counts.where(F.col("c") >= 2).select("gh").unionByName(
+        matched
+    ).distinct()
+    marks = grams.join(bc(flagged), "gh").select(
+        "doc_id", "s", (F.col("s") + k).alias("e")
+    )
+    spans = _merge_islands(marks)
+    new_grams = inc_counts.select("gh").join(bc(matched), "gh", "left_anti")
+    out = {"spans": spans, "new_grams": new_grams}
+    if attributed:
+        out["doc_grams"] = grams.select("doc_id", "gh").distinct()
+    return out
 
 
 def incremental_repeated_spans(
@@ -1864,94 +1953,6 @@ def incremental_repeated_spans(
     Standing-side cost is exactly one column scan of (gh), whatever
     the corpus size.
     """
-    return _incremental_repeated_spans_impl(
+    return incremental_repeated_spans_state(
         new_df, standing_grams, id_col, text_col, k
     )["spans"]
-
-
-def _incremental_repeated_spans_impl(
-    new_df: DataFrame,
-    standing_grams: DataFrame | GramProbe | None,
-    id_col: str,
-    text_col: str,
-    k: int,
-    attributed: bool = False,
-) -> dict[str, DataFrame]:
-    from pyspark.sql import Window
-
-    from novi_pdq_etl_project_prod_spark.operators.text import tokens
-
-    # GramProbe (typed multiset) and true set tables are interchangeable
-    # HERE — the matched set below applies its own distinct; a persisted
-    # doc-attributed gram table (doc_gram_set) also reads fine, its gh
-    # column is all this probe touches
-    standing_grams = _gram_frame(standing_grams)
-    base = new_df.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")
-    ).where(F.size("t") >= k)
-    n_g = F.size("t") - F.lit(k - 1)
-    grams = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), n_g),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("t"), i, k))),
-            )
-        ).alias("pos0", "gh"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("s"), "gh")
-    if attributed:
-        # the positional gram frame feeds THREE consumers in attributed
-        # mode (counts, marks, doc_grams) — pin it so the explode runs
-        # once; batch-bounded rows
-        grams = cache.track(grams)
-    inc_counts = cache.track(
-        grams.groupBy("gh").agg(F.count(F.lit(1)).alias("c"))
-    )
-    n_inc = inc_counts.count()  # fills the cache; also the hint guard
-    bc = F.broadcast if n_inc <= BROADCAST_HINT_MAX_ROWS else (lambda d: d)
-    if standing_grams is None:
-        matched = inc_counts.select("gh").limit(0)
-    else:
-        # ONE map-side pass over the standing gram set: broadcast the
-        # increment's distinct hashes, matched set comes back
-        # candidate-sized; the standing table is never shuffled. The
-        # distinct matters when standing_grams carries multiplicity
-        # (GramProbe callers, or a doc-attributed doc_gram_set table):
-        # a corpus-frequent gram must not inflate the frame that gets
-        # broadcast below.
-        matched = (
-            standing_grams.join(bc(inc_counts.select("gh")), "gh")
-            .select("gh")
-            .distinct()
-        )
-    flagged = inc_counts.where(F.col("c") >= 2).select("gh").unionByName(
-        matched
-    ).distinct()
-    marks = grams.join(bc(flagged), "gh").select(
-        "doc_id", "s", (F.col("s") + k).alias("e")
-    )
-    w = Window.partitionBy("doc_id").orderBy("s")
-    prev_max_e = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    merged = marks.withColumn(
-        "brk",
-        F.when(F.col("s") > F.coalesce(prev_max_e, F.lit(-1)), 1).otherwise(0),
-    ).withColumn(
-        "isl", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    spans = (
-        merged.groupBy("doc_id", "isl")
-        .agg(F.min("s").alias("span_start"), F.max("e").alias("span_end"))
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start"))
-            .cast("long")
-            .alias("span_tokens"),
-        )
-    )
-    new_grams = inc_counts.select("gh").join(bc(matched), "gh", "left_anti")
-    out = {"spans": spans, "new_grams": new_grams}
-    if attributed:
-        out["doc_grams"] = grams.select("doc_id", "gh").distinct()
-    return out

@@ -1202,8 +1202,9 @@ def stream_incremental_exact_dups(
     shuffled, never rewritten, and the committed bytes are O(batch)
     (one (hash, canonical id) segment + the batch's report rows).
     """
+    from novi_pdq_etl_project_prod_spark import cache
     from novi_pdq_etl_project_prod_spark.operators.dedup import (
-        broadcast_if_bounded,
+        _exact_hash_stage,
     )
     from novi_pdq_etl_project_prod_spark.plans.retract import (
         read_live_table,
@@ -1211,75 +1212,24 @@ def stream_incremental_exact_dups(
 
     def _ingest(batch_df: DataFrame, batch_id: int, marker: str) -> None:
         spark = batch_df.sparkSession
-        h_new = (
-            batch_df.select(
-                F.col(id_col).alias("id"),
-                F.md5(F.col(text_col)).alias("h"),
+        # cache.scope: the batch hashes and the stage's candidate frame
+        # are released at trigger end, success or failure — a batch
+        # that dies mid-commit must not strand them
+        with cache.scope():
+            h_new = cache.track(
+                batch_df.select(
+                    F.col(id_col).alias("id"),
+                    F.md5(F.col(text_col)).alias("h"),
+                ).where(F.col("h").isNotNull())
             )
-            .where(F.col("h").isNotNull())
-            .persist()
-        )
-        enriched = None
-        try:
             # retraction-aware standing read (round 12): a retracted
             # doc's content hash must not exact-drop a re-arrival
             standing = read_live_table(
                 spark, root, layer, hashes_table, id_col="canonical_id"
             )
-            new_min = h_new.groupBy("h").agg(F.min("id").alias("new_min"))
-            # mega-batch guard (VERDICT r10 #6): an availableNow
-            # catch-up can deliver one huge trigger; past the cap the
-            # forced broadcasts are dropped and AQE falls back to a
-            # shuffle join — graceful degradation, not an OOM hint
-            n_hashes = new_min.count()
-            bc = lambda d: broadcast_if_bounded(d, n_hashes)  # noqa: E731
-            if standing is None:
-                # first batch: no standing table; derive an EMPTY matched
-                # frame from the batch itself so old_min's type always
-                # equals the caller's id type (int/long/string alike)
-                matched = new_min.select(
-                    "h", F.col("new_min").alias("old_min")
-                ).limit(0)
-            else:
-                # ONE map-side pass over the standing table: broadcast
-                # the trigger-bounded batch hashes, return matched
-                # hashes with their standing canonical ids
-                # (candidate-sized)
-                matched = (
-                    standing.join(bc(h_new.select("h").distinct()), "h")
-                    .groupBy("h")
-                    .agg(F.min("canonical_id").alias("old_min"))
-                )
-            # candidate-sized; persisted so the standing-table scan
-            # behind `matched` runs ONCE per trigger (the report and
-            # new-hash writes, plus the emptiness checks below, all
-            # reuse it instead of re-scanning H)
-            enriched = new_min.join(bc(matched), "h", "left").persist()
-            report = (
-                h_new.join(bc(enriched), "h")
-                .where(
-                    F.col("old_min").isNotNull()
-                    | (F.col("id") > F.col("new_min"))
-                )
-                .select(
-                    F.col("id").alias("doc_id"),
-                    F.coalesce(F.col("old_min"), F.col("new_min")).alias(
-                        "dup_of"
-                    ),
-                    F.when(
-                        F.col("old_min").isNotNull(), F.lit("exact_old")
-                    )
-                    .otherwise(F.lit("exact_new"))
-                    .alias("dup_type"),
-                )
-            )
-            # standing table grows by the batch's genuinely-new hashes
-            # only (hash, canonical id) — hashes already standing keep
-            # their canonical row untouched
-            new_hashes = enriched.where(F.col("old_min").isNull()).select(
-                "h", F.col("new_min").alias("canonical_id")
-            )
-            meta: dict = {marker: batch_id}
+            # mega-batch guard (VERDICT r10 #6): the broadcast bound
+            n_hashes = h_new.select("h").distinct().count()
+            report, new_hashes = _exact_hash_stage(h_new, standing, n_hashes)
             # EMPTY sides are dropped from the commit (ADVICE r10): an
             # all-duplicate batch appends no hashes, a clean batch no
             # report rows — committing zero-row segments every quiet
@@ -1298,15 +1248,9 @@ def stream_incremental_exact_dups(
                 tables,
                 root,
                 layer,
-                meta=meta,
+                meta={marker: batch_id},
                 append_tables=tuple(tables),
             )
-        finally:
-            # unpersist on failure too (round-11 review): a batch that
-            # dies mid-commit must not strand its candidate frames
-            if enriched is not None:
-                enriched.unpersist()
-            h_new.unpersist()
 
     _run_available_now(
         stream, _exactly_once(root, layer, checkpoint_dir, _ingest), checkpoint_dir

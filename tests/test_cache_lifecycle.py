@@ -88,3 +88,36 @@ def test_scope_exit_drains_unreleased_frames(spark):
         assert df.storageLevel.useMemory
     assert not df.storageLevel.useMemory
     assert cache.release() == 0
+
+
+def test_exact_sink_releases_frames_when_commit_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A trigger of ``stream_incremental_exact_dups`` that raises inside
+    ``commit_tables`` must leave none of the sink's frames persisted: a
+    long-lived driver retrying a failing sink would otherwise strand
+    one set of batch frames per attempt."""
+    from novi_pdq_etl_project_prod_spark.streaming import events
+
+    cache.clear_session_state(spark)
+    assert _n_persistent(spark) == 0
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "aa"), (2, "bb"), (3, "aa")], "doc_id long, text string"
+    ).coalesce(1).write.parquet(docs)
+    held = []
+
+    def failing_commit(tables, *args, **kwargs):
+        for df in tables.values():
+            df.count()
+        held.append(_n_persistent(spark))
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(events, "commit_tables", failing_commit)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(docs)
+    with pytest.raises(Exception, match="commit failed"):
+        events.stream_incremental_exact_dups(
+            stream, str(tmp_path / "wh"), "curated", str(tmp_path / "chk")
+        )
+    assert held and held[0] > 0, "the sink persisted nothing to release"
+    assert _n_persistent(spark) == 0, "a failed trigger stranded frames"

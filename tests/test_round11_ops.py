@@ -164,6 +164,51 @@ def test_repeated_spans_matches_python_model(spark, docs):
     assert got == sorted(want)
 
 
+@given(docs=st.lists(_DOC, min_size=1, max_size=6))
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_excise_repeated_spans_matches_python_model(spark, docs):
+    """Random tiny corpora vs a pure-Python model of excision: a token
+    is kept iff no window of a k-gram occurring >= min_count times
+    corpus-wide covers it. Random docs over a 4-word vocabulary flag
+    overlapping and touching windows, so the gap slices run at every
+    interval boundary shape."""
+    from collections import Counter
+
+    from novi_pdq_etl_project_prod_spark.operators.dedup import (
+        excise_repeated_spans,
+    )
+
+    k, min_count = 3, 2
+    rows = [(i, t) for i, t in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r.doc_id, r.n_tokens, r.n_removed, r.text)
+        for r in excise_repeated_spans(df, k=k, min_count=min_count).collect()
+    )
+
+    split = {i: t.split() for i, t in rows}
+    grams = Counter(
+        tuple(toks[j:j + k])
+        for toks in split.values()
+        for j in range(len(toks) - k + 1)
+    )
+    want = []
+    for i, toks in split.items():
+        covered = {
+            j + d
+            for j in range(len(toks) - k + 1)
+            if grams[tuple(toks[j:j + k])] >= min_count
+            for d in range(k)
+        }
+        kept = [x for p, x in enumerate(toks) if p not in covered]
+        want.append((i, len(toks), len(toks) - len(kept), " ".join(kept)))
+    assert got == sorted(want)
+
+
 def test_incremental_spans_metamorphic_vs_full(spark):
     """The m73 contract on a planted fixture: incremental spans (new
     docs vs the standing gram set) == full-corpus repeated_spans
